@@ -1,11 +1,12 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level profiling harness (guide §1/§7: measure first, empirically):
   *   runMain graft.Profile <sfDir> <queryName> [queryName ...]
-  * Runs each query twice (cold, warm) with a listener that records every
+  * Runs each query twice (cold, warm), each driving the full output
+  * through the `noop` sink (a `count()` would let Catalyst prune the
+  * columns a consumer pays for), with a listener that records every
   * stage's wall time, task count, and shuffle bytes; prints the warm run's
   * stage table so the per-operator cost breakdown is visible without the UI
   * (spark.ui is disabled in this sandbox; this is the CLI equivalent of the
@@ -15,13 +16,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = LocalSession.builder()
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
       .getOrCreate()
@@ -51,7 +46,7 @@ object Profile {
     targets.foreach { q =>
       // cold run
       val t0 = System.nanoTime()
-      q.frame(spark, sfDir).count()
+      q.frame(spark, sfDir).write.format("noop").mode("overwrite").save()
       val cold = (System.nanoTime() - t0) / 1e9
       graft.api.Checkpoints.releaseAll(spark)
       System.gc()
@@ -59,7 +54,7 @@ object Profile {
       stages.clear(); jobs.clear()
       spark.sparkContext.addSparkListener(listener)
       val t1 = System.nanoTime()
-      q.frame(spark, sfDir).count()
+      q.frame(spark, sfDir).write.format("noop").mode("overwrite").save()
       val warm = (System.nanoTime() - t1) / 1e9
       // drain the async listener bus BEFORE removing the listener —
       // removal first drops still-queued stage-completion events and

@@ -1,30 +1,38 @@
 package graft.api
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 
-/** Bookkeeping for the shared-model registry (SURVEY §5.3): families
-  * train/mine an artifact once per (session, sfDir) and persist it as a
-  * warehouse table; this object centralizes the two pieces every family
-  * needs identically:
+/** The shared-model registry (SURVEY §5.3): families train/mine an
+  * artifact once per (SparkContext, sfDir) and persist it as a warehouse
+  * table; every later consumer reads the table. This object owns the
+  * whole policy — cache key, table name, once-only build, publish and
+  * reset — so producers are plain calls to [[table]], [[tables]] or
+  * [[value]]. Two rules:
   *
-  *   - [[key]]/[[tableFor]]: the marker key AND the table name both carry
-  *     the scale factor — a marker keyed by sfDir pointing at a GLOBAL
-  *     table name would silently serve one scale factor's artifact to
-  *     another after an interleaved build (sf0.001 -> sf0.01 -> sf0.001
-  *     re-reads sf0.01 rows). The sf rides the table name, so each scale
-  *     factor owns its tables and staleness is structurally impossible.
-  *   - [[track]]/[[resetAll]]: every family registers its marker map at
-  *     class-init; `resetAll` clears them ALL, so determinism specs (the
-  *     SimSpec pattern: reset, build twice, compare) genuinely retrain
-  *     instead of re-reading the persisted table — for every family, not
-  *     just the one that happened to expose a reset.
+  *   - Markers, not frames: the memo keeps a marker or a small
+  *     driver-side value (LR weights, the quantizer's `k`), never a
+  *     DataFrame. Callers get a fresh `spark.table` read on every call,
+  *     so [[Checkpoints.releaseAll]] between queries can never leave a
+  *     cached frame pointing at unpersisted blocks.
+  *   - The scale factor rides the table name ([[tableFor]]): a marker
+  *     keyed by sfDir pointing at a GLOBAL table name would silently
+  *     serve one scale factor's artifact to another after an interleaved
+  *     build (sf0.001 -> sf0.01 -> sf0.001 re-reads sf0.01 rows). With the
+  *     sf in the name each scale factor owns its tables and staleness is
+  *     structurally impossible.
+  *
+  * Concurrency: each artifact has its own slot, built under that slot's
+  * lock, so two artifacts build in parallel, a second caller of the same
+  * artifact waits for the first build instead of repeating it, and a
+  * build may request another artifact (cells -> quantizer) without
+  * nesting a map update. Artifact dependencies form a DAG, so slot locks
+  * are always taken in one order. A failed build leaves its slot empty
+  * and the next caller retries.
   */
 object SharedModels {
 
-  type Key = (Int, String)
-
-  def key(s: SparkSession, d: String): Key =
-    (System.identityHashCode(s.sparkContext), d)
+  private def key(s: SparkSession, d: String, name: String) =
+    (System.identityHashCode(s.sparkContext), d, name)
 
   /** `base` + a sanitized scale-factor tag + a short hash of the FULL
     * path, e.g. `ngram_pairs_full__sf0_01_1a2b3c4d` for
@@ -35,21 +43,68 @@ object SharedModels {
     * would serve B's artifact to A's consumers. The path hash makes
     * table identity agree with marker identity.
     */
-  def tableFor(base: String, d: String): String = {
+  private def tableFor(base: String, d: String): String = {
     val tag = d.split('/').filter(_.nonEmpty).lastOption.getOrElse("root")
       .toLowerCase.replaceAll("[^a-z0-9]", "_")
     val h = scala.util.hashing.MurmurHash3.stringHash(d) & 0xffffffffL
     f"${base}__${tag}_$h%08x"
   }
 
-  private val tracked =
-    new java.util.concurrent.ConcurrentLinkedQueue[java.util.Map[_, _]]
+  /** One artifact's build-once cell. */
+  private final class Slot {
+    @volatile private var done: Option[Any] = None
+    def get(build: => Any): Any = done.getOrElse(synchronized {
+      done.getOrElse { val v = build; done = Some(v); v }
+    })
+  }
 
-  /** Register a family's marker map; returns it for inline declaration. */
-  def track[M <: java.util.Map[_, _]](m: M): M = { tracked.add(m); m }
+  private val slots =
+    new java.util.concurrent.ConcurrentHashMap[(Int, String, String), Slot]
 
-  /** Clear every tracked marker map — the next consumer of each artifact
-    * retrains/re-mines and overwrites its table. Test hook.
+  private def track(s: SparkSession, d: String, name: String): Slot =
+    slots.computeIfAbsent(key(s, d, name), _ => new Slot)
+
+  /** A driver-side artifact: `build` runs once per (SparkContext, sfDir,
+    * name) and its (small) result is returned on every call.
     */
-  def resetAll(): Unit = tracked.forEach(_.clear())
+  def value[V](s: SparkSession, d: String, name: String)(build: => V): V =
+    track(s, d, name).get {
+      val v = build
+      require(!v.isInstanceOf[Dataset[_]],
+        s"SharedModels.value($name) must not hold a DataFrame; publish it with table()")
+      v
+    }.asInstanceOf[V]
+
+  /** Table artifacts that share one build: the first call per
+    * (SparkContext, sfDir) runs `build`, which returns one frame per name
+    * in `bases` (in order) and a small driver-side value; each frame is
+    * published through [[graft.sources.Warehouse.replaceTable]] under its
+    * scale-factor table name. Every call returns fresh reads of the
+    * tables plus the value.
+    */
+  def tables[V](s: SparkSession, d: String, bases: String*)(
+      build: => (Seq[DataFrame], V)): (Seq[DataFrame], V) = {
+    val v = value(s, d, bases.mkString("+")) {
+      val (frames, v) = build
+      require(frames.size == bases.size,
+        s"${bases.mkString(", ")}: build returned ${frames.size} frames")
+      bases.zip(frames).foreach { case (b, f) =>
+        graft.sources.Warehouse.replaceTable(f, tableFor(b, d))
+      }
+      v
+    }
+    (bases.map(b =>
+      s.table(s"${graft.sources.Warehouse.Schema}.${tableFor(b, d)}")), v)
+  }
+
+  /** One table artifact: [[tables]] with a single frame and no value. */
+  def table(s: SparkSession, d: String, base: String)(
+      build: => DataFrame): DataFrame =
+    tables(s, d, base)((Seq(build), ()))._1.head
+
+  /** Forget every artifact — the next consumer of each retrains/re-mines
+    * and overwrites its table, so determinism specs (reset, build twice,
+    * compare) genuinely rebuild instead of re-reading the persisted table.
+    */
+  def resetAll(): Unit = slots.clear()
 }

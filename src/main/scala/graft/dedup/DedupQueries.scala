@@ -227,20 +227,9 @@ object DedupQueries {
     * passing their own frames to [[ngramJaccardFrame]].
     */
   val NgramPairsTable = "ngram_pairs_full"
-  private val pairsDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, java.lang.Boolean])
-
-  private[graft] def sharedNgramPairs(s: SparkSession, d: String): DataFrame = {
-    pairsDone.computeIfAbsent(graft.api.SharedModels.key(s, d), _ => {
-      graft.sources.Warehouse.replaceTable(
-        ngramJaccardFrame(Tables.documents(s, d)),
-        graft.api.SharedModels.tableFor(NgramPairsTable, d))
-      java.lang.Boolean.TRUE
-    })
-    s.table(s"${graft.sources.Warehouse.Schema}." +
-      graft.api.SharedModels.tableFor(NgramPairsTable, d))
-  }
+  private[graft] def sharedNgramPairs(s: SparkSession, d: String): DataFrame =
+    graft.api.SharedModels.table(s, d, NgramPairsTable)(
+      ngramJaccardFrame(Tables.documents(s, d)))
 
   /** The DF-capped posting table (doc_id[, extra...], sh), checkpointed.
     * `extra` columns are evaluated over `docs` (so they may reference

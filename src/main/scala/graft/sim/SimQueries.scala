@@ -244,26 +244,8 @@ object SimQueries {
     * batch reads the frozen graph).
     */
   val GraphEdgesTable = "knn_edges_full"
-  private val edgesDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[SKey, java.lang.Boolean])
-
-  private def sharedGraphEdges(s: SparkSession, d: String): DataFrame = {
-    edgesDone.computeIfAbsent(skey(s, d), _ => {
-      graft.sources.Warehouse.replaceTable(graphEdges(s, d),
-        graft.api.SharedModels.tableFor(GraphEdgesTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, GraphEdgesTable, d)
-  }
-
-  /** Test hook: drop every shared-model marker so the next consumer
-    * RETRAINS and REBUILDS from scratch — SimSpec's determinism pins use
-    * it to compare two genuinely independent builds (without it the
-    * second run would just re-read the persisted tables and the pin
-    * would be vacuous).
-    */
-  private[graft] def resetSharedModels(): Unit =
-    graft.api.SharedModels.resetAll()
+  private def sharedGraphEdges(s: SparkSession, d: String): DataFrame =
+    graft.api.SharedModels.table(s, d, GraphEdgesTable)(graphEdges(s, d))
 
   /** Greedy beam search over [[graphEdges]] — the HNSW-class SEARCH
     * stage, TWO-LAYER with MULTI-PROBE entries: each query ranks the
@@ -360,19 +342,16 @@ object SimQueries {
     * [[graphRecall]] grades it, so the beam never executes twice for
     * the same (session, corpus). Parquet roundtrips the cosine doubles
     * exactly, and the SimSpec determinism pin still rebuilds from
-    * scratch through [[resetSharedModels]].
+    * scratch through [[graft.api.SharedModels.resetAll]].
     */
   val GraphTopkTable = "graph_topk_full"
-  private val graphTopkDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[SKey, java.lang.Boolean])
-
-  private def sharedGraphTopk(s: SparkSession, d: String): DataFrame = {
-    graphTopkDone.computeIfAbsent(skey(s, d), _ => {
+  private def sharedGraphTopk(s: SparkSession, d: String): DataFrame =
+    graft.api.SharedModels.table(s, d, GraphTopkTable) {
       val v = vecs(s, d).select(col("vec_id"), col("v"), col("nrm"))
       val q = broadcast(queriesOf(v))
       val w = Window.partitionBy(col("qid"))
         .orderBy(desc("cosine"), col("vec_id"))
-      val topk = graphBeam(s, d)
+      graphBeam(s, d)
         .join(v, "vec_id")
         .join(q, "qid")
         .withColumn("cosine",
@@ -380,12 +359,7 @@ object SimQueries {
         .withColumn("rn", row_number().over(w).cast("int"))
         .filter(col("rn") <= 10)
         .select(col("qid"), col("rn"), col("vec_id"), col("cosine"))
-      graft.sources.Warehouse.replaceTable(topk,
-        graft.api.SharedModels.tableFor(GraphTopkTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, GraphTopkTable, d)
-  }
+    }
 
   /** HNSW-class graph ANN: navigable k-NN graph + fixed-entry greedy beam
     * search, top-10 per query — completes the index-family story
@@ -1001,66 +975,32 @@ object SimQueries {
   val SharedCodesTable = "pq_codes_full"
   val SharedRepsTable = "ivf_cell_reps_full"
 
-  private type SKey = graft.api.SharedModels.Key
-  private def skey(s: SparkSession, d: String): SKey =
-    graft.api.SharedModels.key(s, d)
-  private def sharedTable(s: SparkSession, base: String, d: String): DataFrame =
-    s.table(s"${graft.sources.Warehouse.Schema}." +
-      graft.api.SharedModels.tableFor(base, d))
-  private val quantDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[SKey, Integer])
-  private val pqDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[SKey, java.lang.Boolean])
-  private val cellsDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[SKey, java.lang.Boolean])
-  private val codesDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[SKey, java.lang.Boolean])
-  private val repsDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[SKey, java.lang.Boolean])
-
   /** The trained full-corpus coarse quantizer, table-backed (trains +
     * persists on first call per (session, sfDir)).
     */
   private def sharedQuantizer(s: SparkSession, d: String): Quantizer = {
-    val k = quantDone.computeIfAbsent(skey(s, d), _ => {
+    val (Seq(cents, anchors), k) = graft.api.SharedModels.tables(
+        s, d, SharedCentsTable, SharedAnchorsTable) {
       val q = trainQuantizer(vecs(s, d).select(col("vec_id"), col("v")))
-      graft.sources.Warehouse.replaceTable(q.cents,
-        graft.api.SharedModels.tableFor(SharedCentsTable, d))
-      graft.sources.Warehouse.replaceTable(q.anchors,
-        graft.api.SharedModels.tableFor(SharedAnchorsTable, d))
-      Int.box(q.k)
-    })
-    Quantizer(sharedTable(s, SharedCentsTable, d),
-      sharedTable(s, SharedAnchorsTable, d), k)
+      (Seq(q.cents, q.anchors), q.k)
+    }
+    Quantizer(cents, anchors, k)
   }
 
   /** The trained full-corpus PQ codebooks (m, j, c), table-backed. */
-  private def sharedCodebook(s: SparkSession, d: String): DataFrame = {
-    pqDone.computeIfAbsent(skey(s, d), _ => {
-      val base = vecs(s, d).select(col("vec_id"), col("v"))
-        .localCheckpoint(eager = false)
-      graft.sources.Warehouse.replaceTable(pqCodebook(base),
-        graft.api.SharedModels.tableFor(SharedCodebooksTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, SharedCodebooksTable, d)
-  }
+  private def sharedCodebook(s: SparkSession, d: String): DataFrame =
+    graft.api.SharedModels.table(s, d, SharedCodebooksTable)(
+      pqCodebook(vecs(s, d).select(col("vec_id"), col("v"))
+        .localCheckpoint(eager = false)))
 
   /** Full-corpus coarse assignment (vec_id, cell, dist), table-backed —
     * shared by every consumer that joins on the trained cell id.
     */
-  private def sharedCells(s: SparkSession, d: String): DataFrame = {
-    val q = sharedQuantizer(s, d) // resolve OUTSIDE the marker update
-    cellsDone.computeIfAbsent(skey(s, d), _ => {
-      val v = vecs(s, d).select(col("vec_id"), col("v"))
-      graft.sources.Warehouse.replaceTable(
-        kmAssignIndexed(v, q)
-          .select(col("vec_id"), col("j").as("cell"), col("dist")),
-        graft.api.SharedModels.tableFor(SharedCellsTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, SharedCellsTable, d)
-  }
+  private def sharedCells(s: SparkSession, d: String): DataFrame =
+    graft.api.SharedModels.table(s, d, SharedCellsTable)(
+      kmAssignIndexed(vecs(s, d).select(col("vec_id"), col("v")),
+        sharedQuantizer(s, d))
+        .select(col("vec_id"), col("j").as("cell"), col("dist")))
 
   /** Per-cell representative member (cell, rep_id) — argmin (dist,
     * vec_id) over [[sharedCells]], i.e. the member nearest its trained
@@ -1069,34 +1009,21 @@ object SimQueries {
     * model-build time, then broadcast at serve time — the entry choice
     * never rescans the corpus.
     */
-  private def sharedCellReps(s: SparkSession, d: String): DataFrame = {
-    val cells = sharedCells(s, d) // resolve OUTSIDE the marker update
-    repsDone.computeIfAbsent(skey(s, d), _ => {
+  private def sharedCellReps(s: SparkSession, d: String): DataFrame =
+    graft.api.SharedModels.table(s, d, SharedRepsTable) {
       val wr = Window.partitionBy(col("cell"))
         .orderBy(col("dist"), col("vec_id"))
-      graft.sources.Warehouse.replaceTable(
-        cells.withColumn("rn", row_number().over(wr))
-          .filter(col("rn") === 1)
-          .select(col("cell"), col("vec_id").as("rep_id")),
-        graft.api.SharedModels.tableFor(SharedRepsTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, SharedRepsTable, d)
-  }
+      sharedCells(s, d).withColumn("rn", row_number().over(wr))
+        .filter(col("rn") === 1)
+        .select(col("cell"), col("vec_id").as("rep_id"))
+    }
 
   /** Full-corpus PQ code table (vec_id, m, code), table-backed. */
-  private def sharedCodes(s: SparkSession, d: String): DataFrame = {
-    val cb = sharedCodebook(s, d) // resolve OUTSIDE the marker update
-    codesDone.computeIfAbsent(skey(s, d), _ => {
-      val base = vecs(s, d).select(col("vec_id"), col("v"))
-      graft.sources.Warehouse.replaceTable(
-        pqAssign(pqSubVecs(base), cb)
-          .select(col("vec_id"), col("m"), col("j").as("code")),
-        graft.api.SharedModels.tableFor(SharedCodesTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, SharedCodesTable, d)
-  }
+  private def sharedCodes(s: SparkSession, d: String): DataFrame =
+    graft.api.SharedModels.table(s, d, SharedCodesTable)(
+      pqAssign(pqSubVecs(vecs(s, d).select(col("vec_id"), col("v"))),
+        sharedCodebook(s, d))
+        .select(col("vec_id"), col("m"), col("j").as("code")))
 
   /** Two-level full-corpus assignment (the [[SimFns.KmeansKFloor]] scale
     * note's second half): each VECTOR argmins over the LIVE trained

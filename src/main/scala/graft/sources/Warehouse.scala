@@ -173,19 +173,6 @@ object Warehouse {
       .saveAsTable(s"$Schema.$table")
   }
 
-  /** Small-file compaction: rewrite a managed table into `targetFiles`
-    * output files. Long-running ingestion accumulates many small files
-    * (one per micro-batch/task); scans then pay per-file open + footer
-    * costs and lose vectorized-read efficiency. At 100 TB this runs
-    * per-partition, driven by file-size stats.
-    *
-    * Refuses partitioned/bucketed tables — a plain rewrite would silently
-    * discard their layout (and with it pruning / shuffle-free joins).
-    * The DROP+RENAME swap is NOT atomic (Spark's catalog has no table
-    * swap): a crash between the two statements leaves only the staging
-    * table `<table>_compacting` to recover from. Table-format layers
-    * (Iceberg/Delta) solve this with snapshot commits.
-    */
   /** Partition-level compaction — the maintenance step
     * [[appendTable]]-driven tables eventually need: every incremental
     * batch adds files to the partitions it touches (one per task), and
@@ -203,21 +190,12 @@ object Warehouse {
   def compactPartition(spark: SparkSession, table: String,
       partCol: String, value: Any, targetFiles: Int = 1): Unit = {
     val qualified = s"$Schema.$table"
-    val prior = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val rows = spark.table(qualified)
-        .filter(org.apache.spark.sql.functions.col(partCol) === value)
-        .repartition(targetFiles)
-        .localCheckpoint()
-      rows.write.mode(SaveMode.Overwrite).insertInto(qualified)
-      graft.api.Checkpoints.release(rows)
-    } finally prior match {
-      case Some(v) =>
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None =>
-        spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    val rows = spark.table(qualified)
+      .filter(org.apache.spark.sql.functions.col(partCol) === value)
+      .repartition(targetFiles)
+      .localCheckpoint()
+    overwritePartitioned(spark, qualified, rows, "dynamic")
+    graft.api.Checkpoints.release(rows)
   }
 
   /** MERGE INTO (keyed upsert): delta rows UPDATE the current row with the
@@ -432,8 +410,8 @@ object Warehouse {
   /** `INSERT OVERWRITE` through an existing partitioned table definition
     * under the given partitionOverwriteMode ("dynamic" = only partitions
     * present in `out` are replaced; "static" = full content), restoring
-    * the session conf afterwards — the write step [[mergeTable]] and
-    * [[compactClustered]] share.
+    * the session conf afterwards — the write step [[mergeTable]],
+    * [[compactClustered]] and [[compactPartition]] share.
     */
   private def overwritePartitioned(spark: SparkSession, qualified: String,
       out: DataFrame, mode: String): Unit = {
@@ -688,6 +666,19 @@ object Warehouse {
     doomed
   }
 
+  /** Small-file compaction: rewrite a managed table into `targetFiles`
+    * output files. Long-running ingestion accumulates many small files
+    * (one per micro-batch/task); scans then pay per-file open + footer
+    * costs and lose vectorized-read efficiency. At 100 TB this runs
+    * per-partition, driven by file-size stats.
+    *
+    * Refuses partitioned/bucketed tables — a plain rewrite would silently
+    * discard their layout (and with it pruning / shuffle-free joins).
+    * The DROP+RENAME swap is NOT atomic (Spark's catalog has no table
+    * swap): a crash between the two statements leaves only the staging
+    * table `<table>_compacting` to recover from. Table-format layers
+    * (Iceberg/Delta) solve this with snapshot commits.
+    */
   def compact(spark: SparkSession, table: String, targetFiles: Int): Unit = {
     val qualified = s"$Schema.$table"
     val meta = spark.sessionState.catalog.getTableMetadata(

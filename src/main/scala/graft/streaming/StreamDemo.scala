@@ -1,6 +1,5 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end Structured Streaming run over the events corpus as a FILE
@@ -17,12 +16,7 @@ import org.apache.spark.sql.functions._
 object StreamDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = graft.LocalSession.builder()
       // fresh warehouse per run: a stale spark-warehouse dir + fresh
       // in-memory catalog fails managed-table CREATE with
       // LOCATION_ALREADY_EXISTS (same discipline as the test fixture)

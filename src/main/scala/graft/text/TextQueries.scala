@@ -595,14 +595,10 @@ object TextQueries {
     * the per-doc filter and the AUC readout (the [[SharedModels]]
     * discipline, with a driver-side 4-vector instead of a table).
     */
-  private val lrWeightsCache = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, IndexedSeq[Double]])
-
   private def sharedLrWeights(s: org.apache.spark.sql.SparkSession,
       d: String): IndexedSeq[Double] =
-    lrWeightsCache.computeIfAbsent(graft.api.SharedModels.key(s, d),
-      _ => lrTrain(lrFeatures(Tables.documents(s, d)), LrIters))
+    graft.api.SharedModels.value(s, d, "lr_weights")(
+      lrTrain(lrFeatures(Tables.documents(s, d)), LrIters))
 
   /** Per-doc scores under the trained weights — shared by [[qualityLr]]
     * and [[qualityLrAuc]].
@@ -2049,28 +2045,15 @@ object TextQueries {
     */
   val BpeMergesTable = "bpe_merges_full"
   val BpeVocabTable = "bpe_vocab_full"
-  private val bpeDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, java.lang.Boolean])
-  private def tkey(s: org.apache.spark.sql.SparkSession, d: String) =
-    graft.api.SharedModels.key(s, d)
-  private def sharedTable(s: org.apache.spark.sql.SparkSession,
-      base: String, d: String): org.apache.spark.sql.DataFrame =
-    s.table(s"${graft.sources.Warehouse.Schema}." +
-      graft.api.SharedModels.tableFor(base, d))
-
   private def sharedBpe(s: org.apache.spark.sql.SparkSession, d: String)
       : (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) = {
-    bpeDone.computeIfAbsent(tkey(s, d), _ => {
-      val (rules, vocab) =
-        bpeTrainState(Tables.documents(s, d), BpeIters, applyLast = true)
-      graft.sources.Warehouse.replaceTable(rules,
-        graft.api.SharedModels.tableFor(BpeMergesTable, d))
-      graft.sources.Warehouse.replaceTable(vocab,
-        graft.api.SharedModels.tableFor(BpeVocabTable, d))
-      java.lang.Boolean.TRUE
-    })
-    (sharedTable(s, BpeMergesTable, d), sharedTable(s, BpeVocabTable, d))
+    val (Seq(rules, vocab), _) =
+      graft.api.SharedModels.tables(s, d, BpeMergesTable, BpeVocabTable) {
+        val (rules, vocab) =
+          bpeTrainState(Tables.documents(s, d), BpeIters, applyLast = true)
+        (Seq(rules, vocab), ())
+      }
+    (rules, vocab)
   }
 
   /** Shared per-doc NB-quality table — [[qualityNbFrame]] trains the
@@ -2078,40 +2061,20 @@ object TextQueries {
     * confusion matrix, calibration curve) share the persisted result.
     */
   val DocNbTable = "doc_nb_full"
-  private val nbDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, java.lang.Boolean])
-
   private def sharedDocNb(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    nbDone.computeIfAbsent(tkey(s, d), _ => {
-      graft.sources.Warehouse.replaceTable(
-        qualityNbFrame(Tables.documents(s, d)),
-        graft.api.SharedModels.tableFor(DocNbTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, DocNbTable, d)
-  }
+      : org.apache.spark.sql.DataFrame =
+    graft.api.SharedModels.table(s, d, DocNbTable)(
+      qualityNbFrame(Tables.documents(s, d)))
 
   /** Shared per-doc bigram-LM perplexity table — [[lmPerplexityFrame]]
     * trains the LM and scores the corpus; its two consumers (per-doc
     * report + CCNet bands) share the persisted result.
     */
   val DocPplTable = "doc_ppl_full"
-  private val pplDone = graft.api.SharedModels.track(
-    new java.util.concurrent.ConcurrentHashMap[
-      graft.api.SharedModels.Key, java.lang.Boolean])
-
   private def sharedDocPpl(s: org.apache.spark.sql.SparkSession, d: String)
-      : org.apache.spark.sql.DataFrame = {
-    pplDone.computeIfAbsent(tkey(s, d), _ => {
-      graft.sources.Warehouse.replaceTable(
-        lmPerplexityFrame(Tables.documents(s, d)),
-        graft.api.SharedModels.tableFor(DocPplTable, d))
-      java.lang.Boolean.TRUE
-    })
-    sharedTable(s, DocPplTable, d)
-  }
+      : org.apache.spark.sql.DataFrame =
+    graft.api.SharedModels.table(s, d, DocPplTable)(
+      lmPerplexityFrame(Tables.documents(s, d)))
 
   /** Shared trainer core: the merge table PLUS the vocab in its final
     * segmentation. `applyLast` controls whether the last round's rule is

@@ -484,11 +484,11 @@ class SimSpec extends SparkSpec {
   // a navigable-graph search from ONE entry point should beat reading
   // one IVF cell at comparable candidate counts).
   test("ann_graph_topk: beam deterministic; recall >= IVF single-cell") {
-    // resetSharedModels forces the second run to RETRAIN and REBUILD the
+    // SharedModels.resetAll forces the second run to RETRAIN and REBUILD the
     // graph from scratch — without it the run would re-read the persisted
     // tables and the determinism pin would be vacuous
     def run() = {
-      SimQueries.resetSharedModels()
+      graft.api.SharedModels.resetAll()
       SimQueries.graphTopk.frame(spark, sf).collect()
         .map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rn"),
           r.getAs[Long]("vec_id"), r.getAs[Double]("cosine")))
