@@ -1,10 +1,15 @@
 package graft.api
 
+import java.util.concurrent.{CompletableFuture, ExecutionException, Executors, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.classic.SparkSession
+import org.apache.spark.sql.execution.SQLExecution
 
-/** Scan-parallelism repair for unsplittably-read inputs (guide §2.5
-  * "input skew: one huge unsplittable file → repartition immediately
-  * after the read").
+/** Parallelism policy: scan-parallelism repair for unsplittably-read
+  * inputs (guide §2.5 "input skew: one huge unsplittable file →
+  * repartition immediately after the read") and independent sub-jobs run
+  * side by side (guide §2.6 "overlap independent jobs").
   */
 object Par {
 
@@ -26,5 +31,64 @@ object Par {
   def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target) else df
+  }
+
+  /** Run the thunks concurrently and return their results in argument
+    * order. Each thunk runs with the caller's Spark local properties
+    * (job group, job tags, scheduler pool) and active session, so its
+    * jobs are attributed to — and cancelled with — the caller's query.
+    * All jobs of one call carry one job tag: on the first failure the
+    * tag is cancelled, every sibling is waited for, and the first error
+    * is rethrown, so no job outlives the call. Results are deterministic
+    * frames or values; only wall-clock depends on the overlap.
+    */
+  def all[A, B](a: => A, b: => B): (A, B) = {
+    val r = run(Seq(() => a, () => b))
+    (r(0).asInstanceOf[A], r(1).asInstanceOf[B])
+  }
+
+  def all[A, B, C](a: => A, b: => B, c: => C): (A, B, C) = {
+    val r = run(Seq(() => a, () => b, () => c))
+    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C])
+  }
+
+  def all[A, B, C, D](a: => A, b: => B, c: => C, d: => D): (A, B, C, D) = {
+    val r = run(Seq(() => a, () => b, () => c, () => d))
+    (r(0).asInstanceOf[A], r(1).asInstanceOf[B], r(2).asInstanceOf[C],
+      r(3).asInstanceOf[D])
+  }
+
+  // a thread per running thunk: a bounded pool starves when a thunk
+  // nests Par.all or waits on a SharedModels slot a sibling is building
+  private val pool = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-par")
+    t.setDaemon(true)
+    t
+  }
+
+  private def run(thunks: Seq[() => Any]): IndexedSeq[Any] = {
+    val s = SparkSession.active
+    val sc = s.sparkContext
+    val tag = s"graft-par-${java.util.UUID.randomUUID()}"
+    // the tag joins the caller's properties only for the capture
+    sc.addJobTag(tag)
+    val fs = try thunks.map(t => SQLExecution.withThreadLocalCaptured(s, pool)(t()))
+      finally sc.removeJobTag(tag)
+    val first = new AtomicReference[Throwable]
+    // supplyAsync wraps a thunk's throw in a CompletionException
+    fs.foreach(_.whenComplete { (_, e) =>
+      if (e != null && first.compareAndSet(null, e.getCause)) sc.cancelJobsWithTag(tag)
+    })
+    val done = CompletableFuture.allOf(fs: _*)
+    while (!done.isDone) {
+      // re-cancel after a failure: a sibling that was between two jobs
+      // when the cancel landed submits its next job afterwards
+      if (first.get != null) sc.cancelJobsWithTag(tag)
+      try done.get(50, TimeUnit.MILLISECONDS) catch {
+        case _: TimeoutException | _: ExecutionException =>
+      }
+    }
+    Option(first.get).foreach(e => throw e)
+    fs.map(_.join()).toIndexedSeq
   }
 }

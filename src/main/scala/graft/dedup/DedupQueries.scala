@@ -3,7 +3,7 @@ package graft.dedup
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.api.GraftQuery
+import graft.api.{GraftQuery, Par}
 import graft.text.TextFns._
 
 /** Deduplication operators over `documents` — exact, n-gram Jaccard,
@@ -1070,32 +1070,25 @@ object DedupQueries {
     "dedup_clusters_multi",
     "cross-family dedup clusters: CC over ngram+minhash+simhash edge union, per-class edge counts",
     DedupOracle.clustersMultiSql) { (s, d) =>
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     val docs = Tables.documents(s, d)
     // ONE corpus scan + tokenize feeds all three evidence classes (each
     // derives its own key — 3-gram shingles, 2-gram shingles, per-token
     // hash votes — from the same materialized token arrays), and the
-    // three mining pipelines then run from concurrent threads so their
+    // three mining pipelines then run as concurrent sub-jobs so their
     // jobs overlap instead of serializing (Spark's scheduler runs
-    // concurrent jobs side by side; results are deterministic frames, so
-    // only wall-clock changes)
+    // concurrent jobs side by side)
     val tok = tokenizedDocs(docs)
-    val Seq(jac, mh, sh) = Await.result(Future.sequence(Seq(
-      Future(jaccardPairs(cappedPostingsFromToks(tok, ShingleN), lit(true))
-        .filter(col("jaccard") >= ClusterJaccard)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"),
-          lit("jaccard").as("evidence"))),
-      Future(minhashJaccardFromToks(tok)
-        .filter(col("jaccard") >= ClusterJaccard)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"),
-          lit("minhash").as("evidence"))),
-      Future(simhashPairsFromFp(
-        graft.text.TextQueries.simhashFromTokens(tok).localCheckpoint())
-        .filter(col("hamming") <= ClusterHamming)
-        .select(col("doc_a").as("a"), col("doc_b").as("b"),
-          lit("simhash").as("evidence"))))), Duration.Inf)
+    def classEdges(pairs: DataFrame, keep: Column, evidence: String) =
+      pairs.filter(keep).select(col("doc_a").as("a"), col("doc_b").as("b"),
+        lit(evidence).as("evidence"))
+    val (jac, mh, sh) = Par.all(
+      classEdges(jaccardPairs(cappedPostingsFromToks(tok, ShingleN), lit(true)),
+        col("jaccard") >= ClusterJaccard, "jaccard"),
+      classEdges(minhashJaccardFromToks(tok),
+        col("jaccard") >= ClusterJaccard, "minhash"),
+      classEdges(simhashPairsFromFp(
+        graft.text.TextQueries.simhashFromTokens(tok).localCheckpoint()),
+        col("hamming") <= ClusterHamming, "simhash"))
     // materialize the union: it feeds every CC sweep AND the per-class
     // rollup — without the cut all three mining pipelines re-run per use
     val edges = jac.unionByName(mh).unionByName(sh).localCheckpoint()
@@ -1517,9 +1510,6 @@ object DedupQueries {
     s"LSH grading: band-candidate recall of exact 2-gram J>=$ClusterJaccard pairs + signature MAE",
     DedupOracle.lshRecallSql) { (s, d) =>
     import graft.api.Det
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     val tok = tokenizedDocs(Tables.documents(s, d))
     // shingle explodes stay map-side re-runs from the checkpointed token
     // frame — materializing the full shingle frame was A/B'd and LOST
@@ -1529,14 +1519,12 @@ object DedupQueries {
       explode(array_distinct(shingles(col("toks"), MinhashShingleN))).as("sh"))
     // the truth miner's posting materialization and the whole banded
     // verify pipeline are INDEPENDENT until the final aggregates — run
-    // their eager checkpoint jobs from concurrent threads (the
-    // clustersMulti overlap pattern: deterministic frames, only
-    // wall-clock changes; A/B'd 1.74 -> ~1.3 s at sf0.1)
-    val truthF = Future(capPostings(sh))
-    // ONE signature aggregation (the duplicated SHUFFLE of the round-10
-    // shape), shared by the banded verify path and the per-component
-    // match columns below
-    val verestF = Future {
+    // their eager checkpoint jobs as concurrent sub-jobs (the
+    // clustersMulti overlap pattern; A/B'd 1.74 -> ~1.3 s at sf0.1)
+    val (truthPostings, verest) = Par.all(capPostings(sh), {
+      // ONE signature aggregation (the duplicated SHUFFLE of the round-10
+      // shape), shared by the banded verify path and the per-component
+      // match columns below
       val sigs = minhashSigs(sh).localCheckpoint()
       val matches = (0 until MinhashK).map(i =>
         when(col(s"sa.s$i") === col(s"sb.s$i"), 1).otherwise(0)).reduce(_ + _)
@@ -1546,11 +1534,10 @@ object DedupQueries {
         .select(col("doc_a"), col("doc_b"), col("jaccard"),
           (matches.cast("double") / lit(MinhashK)).as("est"))
         .localCheckpoint()
-    }
-    val truth = jaccardPairs(Await.result(truthF, Duration.Inf), lit(true))
+    })
+    val truth = jaccardPairs(truthPostings, lit(true))
       .filter(col("jaccard") >= ClusterJaccard)
       .select(col("doc_a").as("ta"), col("doc_b").as("tb"))
-    val verest = Await.result(verestF, Duration.Inf)
     // n_truth and n_caught in ONE pass: left join against the (distinct-
     // pair) candidate set, count(*) vs count(matched). truth then has a
     // single consumer, so it needs no materialization barrier — one
@@ -1976,58 +1963,48 @@ object DedupQueries {
     "staged dedup funnel: exact -> text near-dup CC -> semantic CC, per-language survivor counts",
     DedupOracle.stageFunnelSql) { (s, d) =>
     import graft.text.TextFns
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val docs = Tables.documents(s, d)
+    val base = Tables.documents(s, d).select(col("doc_id"), col("lang"),
+      TextFns.fingerprint(col("text")).as("fp"))
+    // a CC stage over the previous stage's survivors: edges restricted to
+    // surviving endpoints, each cluster keeps its min id
+    def ccStage(prev: DataFrame, kept: String, edges: DataFrame, keep: String) = {
+      val ids = prev.filter(col(kept)).select(col("doc_id"))
+      val lab = connectedComponents(edges
+        .join(ids.select(col("doc_id").as("a")), Seq("a"), "semi")
+        .join(ids.select(col("doc_id").as("b")), Seq("b"), "semi"))
+      prev.filter(col(kept))
+        .join(lab, col("doc_id") === col("node"), "left")
+        .withColumn(keep, col("label").isNull || col("label") === col("doc_id"))
+        .select(col("doc_id"), col("lang"), col(keep))
+    }
     // the TEXT pair mine and the SEMANTIC edge mine (kmeans training +
     // intra-cell pair join) depend on NO earlier stage — only their
-    // survivor FILTERS do — so both mines run concurrently with the
-    // stage-1/2 sequence and are filtered when their stage arrives
-    // (same-window warm A/B at sf0.1: 5.8 -> 2.7 s)
-    val tEdgesF = Future(sharedNgramPairs(s, d)
-      .filter(col("jaccard") >= ClusterJaccard)
-      .select(col("doc_a").as("a"), col("doc_b").as("b"))
-      .localCheckpoint())
-    val sEdgesF = Future(
-      graft.sim.SimQueries.semanticEdges(s, d).localCheckpoint())
-    val base = docs.select(col("doc_id"), col("lang"),
-      TextFns.fingerprint(col("text")).as("fp"))
-    // stage 1: exact — keep min doc_id per fingerprint
-    val w1 = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
-    val s1 = base
-      .withColumn("keep1", col("doc_id") === min(col("doc_id")).over(w1))
-      .select(col("doc_id"), col("lang"), col("keep1"))
-      .localCheckpoint()
-    val s1ids = s1.filter(col("keep1")).select(col("doc_id"))
-    // stage 2: text near-dup CC over surviving endpoints only
-    val tEdges = Await.result(tEdgesF, Duration.Inf)
-      .join(s1ids.select(col("doc_id").as("a")), Seq("a"), "semi")
-      .join(s1ids.select(col("doc_id").as("b")), Seq("b"), "semi")
-    val tLab = connectedComponents(tEdges)
-    val s2 = s1.filter(col("keep1"))
-      .join(tLab, col("doc_id") === col("node"), "left")
-      .withColumn("keep2", col("label").isNull || col("label") === col("doc_id"))
-      .select(col("doc_id"), col("lang"), col("keep2"))
-      .localCheckpoint()
-    val s2ids = s2.filter(col("keep2")).select(col("doc_id"))
-    // stage 3: semantic CC over stage-2 survivors (vec_id == doc_id)
-    val sEdges = Await.result(sEdgesF, Duration.Inf)
-      .join(s2ids.select(col("doc_id").as("a")), Seq("a"), "semi")
-      .join(s2ids.select(col("doc_id").as("b")), Seq("b"), "semi")
-    val sLab = connectedComponents(sEdges)
-    val s3 = s2.filter(col("keep2"))
-      .join(sLab, col("doc_id") === col("node"), "left")
-      .withColumn("keep3", col("label").isNull || col("label") === col("doc_id"))
-      .select(col("doc_id"), col("lang"), col("keep3"))
-    val ingest = base.groupBy(col("lang")).agg(count(lit(1)).as("n_ingest"))
-    val k1 = s1.filter(col("keep1")).groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_exact_kept"))
-    val k2 = s2.filter(col("keep2")).groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_textdedup_kept"))
-    val k3 = s3.filter(col("keep3")).groupBy(col("lang"))
-      .agg(count(lit(1)).as("n_semantic_kept"))
-    ingest.join(k1, "lang").join(k2, "lang").join(k3, "lang")
+    // survivor FILTERS do — so the text mine runs concurrently with
+    // stage 1, the semantic mine with stages 1-2, and each is filtered
+    // when its stage arrives (same-window warm A/B at sf0.1: 5.8 -> 2.7 s)
+    val ((s1, s2), sEdges) = Par.all({
+      // stage 1: exact — keep min doc_id per fingerprint
+      val w1 = org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))
+      val (tEdges, s1) = Par.all(
+        sharedNgramPairs(s, d)
+          .filter(col("jaccard") >= ClusterJaccard)
+          .select(col("doc_a").as("a"), col("doc_b").as("b"))
+          .localCheckpoint(),
+        base
+          .withColumn("keep1", col("doc_id") === min(col("doc_id")).over(w1))
+          .select(col("doc_id"), col("lang"), col("keep1"))
+          .localCheckpoint())
+      // stage 2: text near-dup CC
+      (s1, ccStage(s1, "keep1", tEdges, "keep2").localCheckpoint())
+    }, graft.sim.SimQueries.semanticEdges(s, d).localCheckpoint())
+    // stage 3: semantic CC (vec_id == doc_id)
+    val s3 = ccStage(s2, "keep2", sEdges, "keep3")
+    def kept(stage: DataFrame, keep: String, as: String) =
+      stage.filter(col(keep)).groupBy(col("lang")).agg(count(lit(1)).as(as))
+    base.groupBy(col("lang")).agg(count(lit(1)).as("n_ingest"))
+      .join(kept(s1, "keep1", "n_exact_kept"), "lang")
+      .join(kept(s2, "keep2", "n_textdedup_kept"), "lang")
+      .join(kept(s3, "keep3", "n_semantic_kept"), "lang")
       .orderBy("lang")
   }
 

@@ -271,7 +271,8 @@ object LayoutQueries {
     import graft.sources.Warehouse
     val cellShift = 1L << (2 * DimBits - FilePrefixBits)
     val cellFiles = 1L << FilePrefixBits
-    val rows = gridRows(s, d, withIngestKey = true)
+    val bounds = Seq("plo", "phi", "xlo", "xhi")
+    val graded = gridRows(s, d, withIngestKey = true)
       .withColumn("zcell", expr(s"z div $cellShift"))
       .withColumn("xbcut",
         datediff(lit(OptimizeSinceDate).cast("timestamp"),
@@ -286,30 +287,22 @@ object LayoutQueries {
       .withColumn("matched",
         col("x").between(col("xlo"), col("xhi"))
           && col("pk").between(col("plo"), col("phi")))
-      // the table persists only per-row facts; plo/phi/xlo/xhi are
-      // row-CONSTANT predicate bounds, so writing them per row made the
-      // repartition shuffle and both rewrites carry 4 dead longs per row
-      // (guide §2.3 shuffle fewer bytes) — measure() re-derives them
-      // from the same expressions and crossJoins the 1-row frame back
+    // plo/phi/xlo/xhi are row-CONSTANT predicate bounds: the table
+    // persists only per-row facts (4 dead longs per row would ride the
+    // repartition shuffle and both rewrites, guide §2.3), so the bounds
+    // are read once off the graded frame — one limit-1 row — and
+    // measure() attaches them as literals
+    val b = graded.select(bounds.map(col): _*).head()
+    val rows = graded
       .select(col("file_id"), col("x"), col("pk"), col("zcell"),
         col("matched"))
       .repartition(col("file_id"))
     Warehouse.replacePartitioned(rows, LayoutTable, "file_id")
-    val consts = Tables.lineitem(s, d)
-      .agg(max(col("l_partkey")).cast("long").as("maxpk"))
-      .select(
-        expr(s"((maxpk + 1) * $PredPkLoPct) div 100").as("plo"),
-        expr(s"((maxpk + 1) * $PredPkHiPct) div 100").as("phi"),
-        datediff(lit(OptPredDateLo).cast("timestamp"),
-          lit(BaseDate).cast("timestamp")).cast("long").as("xlo"),
-        datediff(lit(OptPredDateHi).cast("timestamp"),
-          lit(BaseDate).cast("timestamp")).cast("long").as("xhi"))
     def measure(state: String) = pruneSummary(
       s.table(s"${Warehouse.Schema}.$LayoutTable")
-        .crossJoin(broadcast(consts))
-        .select(lit(state).as("layout"), col("file_id"), col("x"),
-          col("pk"), col("matched"), col("plo"), col("phi"), col("xlo"),
-          col("xhi")))
+        .select(Seq(lit(state).as("layout"), col("file_id"), col("x"),
+          col("pk"), col("matched")) ++
+          bounds.map(c => lit(b.getAs[Long](c)).as(c)): _*))
     val before = measure("appended").localCheckpoint()
     Warehouse.compactClustered(s, LayoutTable, "file_id", "zcell")
     before.unionByName(measure("clustered")).orderBy("layout")

@@ -39,6 +39,25 @@ class SmokeSpec extends SparkSpec {
     assert(offenders.isEmpty, s"cartesian plans: $offenders")
   }
 
+  test("parallel sub-jobs have one owner: no global-pool Future/Await outside graft.api.Par") {
+    // a global-EC Future keeps the job group of whichever query grew the
+    // pool and an Await.result(_, Duration.Inf) leaves sibling jobs
+    // running when one branch fails — graft.api.Par.all owns that policy
+    import scala.jdk.CollectionConverters._
+    import java.nio.file.{Files, Paths}
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the repo root, not ${Paths.get("").toAbsolutePath}")
+    val banned = Seq("ExecutionContext.Implicits.global", "Await.result", "Duration.Inf")
+    val offenders = Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.endsWith("graft/api/Par.scala"))
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if banned.exists(line.contains) => s"$p:${i + 1}: ${line.trim}"
+        }
+      }.toList
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
   test("every oracle has a deterministic total order (or is a 1-row aggregate)") {
     // hash-comparison is order-sensitive: any multi-row oracle without an
     // ORDER BY is a latent flake. 1-row aggregates self-declare via
