@@ -14,7 +14,7 @@ object DedupOracle {
   import DedupQueries.{BandRows, MinhashK, MinhashShingleN, NgramDfCap,
     ShingleN, SimhashBandBits, SimhashBands, SimhashHammingMax}
 
-  private def shingleCtes(n: Int, out: String = "sh",
+  private def shingleCtes(n: Int, out: String,
       t: String = "t"): String = s"""
     $t AS (
       SELECT doc_id, string_split(text, ' ') AS toks FROM documents

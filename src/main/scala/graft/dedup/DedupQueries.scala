@@ -251,7 +251,7 @@ object DedupQueries {
     // md5 over the normalized text, and each doc explodes to ~300 rows).
     graft.functions.GraftFunctions.register(docs.sparkSession)
     val pre = docs.select(col("doc_id") +: col("text") +: extra: _*)
-    val keep = pre.columns.filterNot(_ == "text").map(col)
+    val keep = pre.columns.toSeq.filterNot(_ == "text").map(col)
     capPostings(pre.select(keep :+
       explode(array_distinct(shingles(tokens(col("text")), n))).as("sh"): _*))
   }

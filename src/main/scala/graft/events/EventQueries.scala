@@ -1777,7 +1777,6 @@ object EventQueries {
     val touched = ev.filter(col("event_id") % Scd2DeltaMod === 0)
       .select("user_id").distinct()
     val delta = fullDim.join(touched, Seq("user_id"), "left_semi")
-      .localCheckpoint() // mergeTable's dup-key guard + write both read it
     Warehouse.mergeTable(delta, Scd2DimTable, Seq("user_id", "version"))
     val merged = s.table(s"${Warehouse.Schema}.$Scd2DimTable")
     val full = fullDim.select(col("user_id").as("fu"),
@@ -3174,7 +3173,6 @@ object EventQueries {
     */
   def abCupedFrame(events: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val boundary = lit(CupedBoundary).cast("timestamp")
     val vq2 = Det.quantize(col("value"), 2)
     val perUser = events

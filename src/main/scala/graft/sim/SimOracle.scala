@@ -50,8 +50,7 @@ object SimOracle {
     * literal for the fixed-dim twins and a scalar subquery over the
     * energy CTE for the adaptive one.
     */
-  private def dotPfx(a: String, b: String,
-      dimSql: String = SimQueries.MatryoshkaDim.toString): String =
+  private def dotPfx(a: String, b: String, dimSql: String): String =
     fold(s"list_transform(range(1, $dimSql + 1), " +
       s"i -> $a[i] * $b[i])")
 

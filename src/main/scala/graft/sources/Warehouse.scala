@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.functions.col
 
 /** The Load step of the reference ETL, Spark-native
   * (/root/reference/main.py:198-219 + connect_postgres_target.py:25-26):
@@ -20,18 +22,18 @@ object Warehouse {
   def ensureSchema(spark: SparkSession): Unit =
     spark.sql(s"CREATE DATABASE IF NOT EXISTS $Schema")
 
-  /** Replace-mode must also replace an ORPHAN location: with the
-    * in-memory catalog, a prior JVM's managed-table directory survives
-    * on disk with no catalog entry, and `saveAsTable` refuses to adopt
-    * it (LOCATION_ALREADY_EXISTS). When the catalog DOES know the table,
-    * Overwrite handles the swap itself and this is a no-op — the
+  private def ident(table: String) = TableIdentifier(table, Some(Schema))
+
+  /** A publish to a missing table must also replace an ORPHAN location:
+    * with the in-memory catalog, a prior JVM's managed-table directory
+    * survives on disk with no catalog entry, and `saveAsTable` refuses to
+    * adopt it (LOCATION_ALREADY_EXISTS). When the catalog DOES know the
+    * table, the write handles the swap itself and this is a no-op — the
     * atomic-per-table property is untouched.
     */
   private def clearOrphanLocation(spark: SparkSession, table: String): Unit = {
     val cat = spark.sessionState.catalog
-    val ident =
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(Schema))
-    if (!cat.tableExists(ident)) {
+    if (!cat.tableExists(ident(table))) {
       val db = cat.getDatabaseMetadata(Schema)
       val path = new org.apache.hadoop.fs.Path(
         new org.apache.hadoop.fs.Path(db.locationUri), table)
@@ -41,11 +43,8 @@ object Warehouse {
   }
 
   /** S3/S4: replace-mode load of a result table. */
-  def replaceTable(df: DataFrame, table: String): Unit = {
-    ensureSchema(df.sparkSession)
-    clearOrphanLocation(df.sparkSession, table)
-    df.write.mode(SaveMode.Overwrite).saveAsTable(s"$Schema.$table")
-  }
+  def replaceTable(df: DataFrame, table: String): Unit =
+    publish(table, df)(save(table, SaveMode.Overwrite, None))
 
   /** S6: introspection scalar (the reference prints current_database()). */
   def currentDatabase(spark: SparkSession): String =
@@ -54,20 +53,18 @@ object Warehouse {
   /** Table property carrying the optimistic-concurrency commit version. */
   private val CommitVersionProp = "graft.commit.version"
 
-  /** Current commit version of a managed table (0 for a table no guarded
-    * writer has published yet, and for a missing table). Guarded writers
-    * ([[mergeTable]], [[compactClustered]] with `expectedVersion`) bump
-    * it by one per successful publish; a writer that records the version
-    * it READ and passes it back as `expectedVersion` gets the optimistic
+  /** Current commit version of a managed table (0 for a missing table).
+    * EVERY publish — each writer below goes through [[commit]] — bumps it
+    * by one, replace-style rewrites and appends included; a writer that
+    * records the version it READ and passes it back as `expectedVersion`
+    * ([[mergeTable]], [[compactClustered]]) gets the optimistic
     * check-and-swap every table format ships: publishing over a version
     * it did not read is refused, never silently lost.
     */
   def commitVersion(spark: SparkSession, table: String): Long = {
-    val ident =
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(Schema))
     val cat = spark.sessionState.catalog
-    if (!cat.tableExists(ident)) 0L
-    else cat.getTableMetadata(ident).properties
+    if (!cat.tableExists(ident(table))) 0L
+    else cat.getTableMetadata(ident(table)).properties
       .getOrElse(CommitVersionProp, "0").toLong
   }
 
@@ -87,15 +84,15 @@ object Warehouse {
     * read-modify-write race this detects.
     *
     * Crash-window caveat (the other half of the same non-atomicity): the
-    * publish and the [[bumpVersion]] SWAP are also two steps, so a crash
+    * publish and the version-bump SWAP are also two steps, so a crash
     * BETWEEN them leaves the table's data changed but its version clock
     * stale — a later writer holding the pre-crash version then passes
     * this check against already-changed data (a lost update the racing-
     * writers caveat above does not cover). A table format closes this
     * too, by carrying the version inside the same atomic snapshot commit
     * as the data; on this catalog the recovery discipline is: after a
-    * crashed guarded write, bump the version manually (or re-publish)
-    * before admitting new guarded writers.
+    * crashed write, re-publish (which bumps the version) before admitting
+    * new guarded writers.
     */
   private def guardStale(spark: SparkSession, table: String,
       expected: Option[Long]): Long = {
@@ -109,15 +106,73 @@ object Warehouse {
     cur
   }
 
-  /** The SWAP: bump the commit version after a successful publish.
-    * Re-sets the property explicitly because replace-style writes
-    * (saveAsTable Overwrite) recreate the table definition and would
-    * otherwise silently reset the version clock.
+  /** The one commit step every writer in this object ends in: the
+    * reference's Load policy (create the schema, then replace the target)
+    * plus what a publish owes later readers, in this order:
+    *   1. ensure the schema; clear an orphan location if the table is
+    *      missing ([[clearOrphanLocation]]);
+    *   2. `selfRead`: materialize `out0` (localCheckpoint) — Spark refuses
+    *      an overwrite that reads its own target;
+    *   3. collect the `touched` partitions (one column per partition
+    *      column, same names) that `out` leaves with no rows — dynamic
+    *      overwrite alone would keep their stale files;
+    *   4. check `expected` ([[guardStale]]), immediately before the write;
+    *   5. `write(out)`;
+    *   6. release the blocks materialized for this publish (`out` when
+    *      `selfRead`, plus the writer's own `scratch`), also when 4–5 throw;
+    *   7. drop the emptied partitions through the catalog (a NULL value
+    *      maps to the default-partition name; values go through the same
+    *      Cast-to-string the writer uses for directory names, because
+    *      e.g. java.sql.Timestamp's toString differs);
+    *   8. set the commit version to prior + 1 — explicitly, since a
+    *      replace-style write recreates the table definition and would
+    *      otherwise reset the clock, and an append would not move it.
+    * Staging a write and swapping it in (atomic publish) belongs here too:
+    * this is the one place every publish passes through.
     */
-  private def bumpVersion(spark: SparkSession, table: String,
-      prior: Long): Unit =
+  private def commit(table: String, out0: DataFrame, selfRead: Boolean,
+      expected: Option[Long], touched: Option[DataFrame],
+      scratch: Seq[DataFrame])(write: DataFrame => Unit): Unit = {
+    val spark = out0.sparkSession
+    ensureSchema(spark)
+    clearOrphanLocation(spark, table)
+    val out = if (selfRead) out0.localCheckpoint() else out0
+    val materialized = if (selfRead) out +: scratch else scratch
+    val (prior, emptied) =
+      try {
+        val emptied = touched.toSeq.flatMap { t =>
+          val pc = t.columns.toSeq
+          t.as("t").join(out.select(pc.map(col): _*).distinct().as("o"),
+              pc.map(c => col(s"t.$c") <=> col(s"o.$c")).reduce(_ && _),
+              "left_anti")
+            .select(pc.map(c => col(s"t.$c").cast("string")): _*)
+            .collect().toSeq.map(r => pc.zipWithIndex.map { case (c, i) =>
+              c -> (if (r.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__"
+                    else r.getString(i))
+            }.toMap)
+        }
+        val prior = guardStale(spark, table, expected)
+        write(out)
+        (prior, emptied)
+      } finally materialized.foreach(graft.api.Checkpoints.release(_))
+    if (emptied.nonEmpty)
+      spark.sessionState.catalog.dropPartitions(ident(table), emptied,
+        ignoreIfNotExists = true, purge = false, retainData = false)
     spark.sql(s"ALTER TABLE $Schema.$table SET TBLPROPERTIES " +
       s"('$CommitVersionProp' = '${prior + 1}')")
+  }
+
+  /** [[commit]] for a writer that neither reads its target nor guards. */
+  private def publish(table: String, out: DataFrame)(
+      write: DataFrame => Unit): Unit =
+    commit(table, out, selfRead = false, None, None, Nil)(write)
+
+  /** The saveAsTable write of `Schema.table`, optionally partitioned. */
+  private def save(table: String, mode: SaveMode, partCol: Option[String])(
+      out: DataFrame): Unit = {
+    val w = out.write.mode(mode)
+    partCol.fold(w)(w.partitionBy(_)).saveAsTable(s"$Schema.$table")
+  }
 
   /** The reference's full Load step: both derived tables, replace mode
     * (main.py:204-219).
@@ -132,13 +187,8 @@ object Warehouse {
     * the layout that gives partition PRUNING on the read path (a filter on
     * the partition column skips whole directories at 100 TB).
     */
-  def replacePartitioned(df: DataFrame, table: String, partCol: String): Unit = {
-    ensureSchema(df.sparkSession)
-    clearOrphanLocation(df.sparkSession, table)
-    df.write.mode(SaveMode.Overwrite)
-      .partitionBy(partCol)
-      .saveAsTable(s"$Schema.$table")
-  }
+  def replacePartitioned(df: DataFrame, table: String, partCol: String): Unit =
+    publish(table, df)(save(table, SaveMode.Overwrite, Some(partCol)))
 
   /** Incremental-batch load: APPEND into an existing (typically
     * partitioned) managed table — the batch's files land inside the
@@ -153,10 +203,8 @@ object Warehouse {
     * replay safety overwrite the touched partitions instead.
     */
   def appendTable(df: DataFrame, table: String,
-      partCol: Option[String] = None): Unit = {
-    val w = df.write.mode(SaveMode.Append)
-    partCol.fold(w)(c => w.partitionBy(c)).saveAsTable(s"$Schema.$table")
-  }
+      partCol: Option[String] = None): Unit =
+    publish(table, df)(save(table, SaveMode.Append, partCol))
 
   /** Bucketed replace-mode load: rows hash-distributed into `buckets`
     * files per bucket key. Two tables bucketed the same way join WITHOUT a
@@ -164,14 +212,11 @@ object Warehouse {
     * to the biggest cost of repeated large joins at scale.
     */
   def replaceBucketed(df: DataFrame, table: String,
-    bucketCol: String, buckets: Int): Unit = {
-    ensureSchema(df.sparkSession)
-    clearOrphanLocation(df.sparkSession, table)
-    df.write.mode(SaveMode.Overwrite)
+    bucketCol: String, buckets: Int): Unit =
+    publish(table, df)(_.write.mode(SaveMode.Overwrite)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)
-      .saveAsTable(s"$Schema.$table")
-  }
+      .saveAsTable(s"$Schema.$table"))
 
   /** Partition-level compaction — the maintenance step
     * [[appendTable]]-driven tables eventually need: every incremental
@@ -181,7 +226,7 @@ object Warehouse {
     * files via dynamic partition overwrite (only the written partition
     * is replaced; sibling partitions' files are untouched — the
     * whole-table [[compact]] would rewrite 100% to fix 1%). The
-    * partition is materialized (localCheckpoint) before the overwrite —
+    * partition is materialized ([[commit]]) before the overwrite —
     * Spark refuses an insert that reads from its own target. Same
     * non-atomicity caveat as [[compact]]: a crash mid-write leaves the
     * partition partially rewritten; table formats with snapshot commits
@@ -190,12 +235,9 @@ object Warehouse {
   def compactPartition(spark: SparkSession, table: String,
       partCol: String, value: Any, targetFiles: Int = 1): Unit = {
     val qualified = s"$Schema.$table"
-    val rows = spark.table(qualified)
-      .filter(org.apache.spark.sql.functions.col(partCol) === value)
-      .repartition(targetFiles)
-      .localCheckpoint()
-    overwritePartitioned(spark, qualified, rows, "dynamic")
-    graft.api.Checkpoints.release(rows)
+    commit(table, spark.table(qualified).filter(col(partCol) === value)
+        .repartition(targetFiles), selfRead = true, None, None, Nil)(
+      overwritePartitioned(spark, qualified, _, "dynamic"))
   }
 
   /** MERGE INTO (keyed upsert): delta rows UPDATE the current row with the
@@ -252,10 +294,10 @@ object Warehouse {
     *
     * `expectedVersion` opts into OPTIMISTIC CONCURRENCY: pass the
     * [[commitVersion]] the writer read and the merge refuses
-    * (ConcurrentModificationException, nothing written) if another
-    * guarded publish landed since — the lost-update detection every
-    * table format ships ([[guardStale]] for the atomicity caveat).
-    * Every successful merge bumps the version, guarded or not.
+    * (ConcurrentModificationException, nothing written) if any publish
+    * landed since — the lost-update detection every table format ships
+    * ([[guardStale]] for the atomicity caveat). Every successful merge
+    * bumps the version, guarded or not (the [[commit]] step).
     *
     * A table FORMAT (Delta/Iceberg) gets the same semantics with
     * file-level skipping + a snapshot commit; this is the engine
@@ -264,27 +306,26 @@ object Warehouse {
   def mergeTable(delta0: DataFrame, table: String, keys: Seq[String],
       deletes: Option[DataFrame] = None, evolve: Boolean = false,
       expectedVersion: Option[Long] = None): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.{broadcast, count, lit}
     val spark = delta0.sparkSession
-    ensureSchema(spark)
     val qualified = s"$Schema.$table"
     require(keys.nonEmpty, "mergeTable needs at least one key column")
-    val dup = delta0.groupBy(keys.map(col): _*)
+    val keyCols = keys.map(col)
+    // the dup-key guard, the overlap guard and the write all read the
+    // delta: materialize it once; the commit step releases it
+    val staged = delta0.localCheckpoint()
+    val dup = staged.groupBy(keyCols: _*)
       .agg(count(lit(1)).as("n")).filter(col("n") > 1).limit(1).count()
     require(dup == 0,
       s"mergeTable delta has duplicate keys on (${keys.mkString(", ")})")
-    val delKeys = deletes.map(_.select(keys.map(col): _*).distinct())
-    val ident =
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(Schema))
+    val delKeys = deletes.map(_.select(keyCols: _*).distinct())
     val cat = spark.sessionState.catalog
-    if (!cat.tableExists(ident)) {
+    if (!cat.tableExists(ident(table))) {
       // delete keys against a missing table are all no-ops; a writer
       // claiming to have read a positive version of a table that does
       // not exist is stale by definition (someone dropped it since)
-      guardStale(spark, table, expectedVersion)
-      clearOrphanLocation(spark, table)
-      delta0.write.mode(SaveMode.Overwrite).saveAsTable(qualified)
-      bumpVersion(spark, table, 0L)
+      commit(table, staged, selfRead = false, expectedVersion, None,
+        Seq(staged))(save(table, SaveMode.Overwrite, None))
       return
     }
     // evolution-aware merge: a CDC feed that gains a column mid-stream
@@ -297,16 +338,16 @@ object Warehouse {
     if (!evolve) {
       val known = spark.table(qualified).columns
         .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
-      val unknown = delta0.columns
+      val unknown = staged.columns
         .filterNot(c => known(c.toLowerCase(java.util.Locale.ROOT)))
       require(unknown.isEmpty,
         s"mergeTable: delta carries columns $qualified does not have " +
           s"(${unknown.mkString(", ")}) — pass evolve = true to widen " +
           "the table, or drop them explicitly")
     }
-    val delta = if (evolve) evolveAndAlign(delta0, table) else delta0
+    val delta = if (evolve) evolveAndAlign(staged, table) else staged
     delKeys.foreach { dk0 =>
-      val overlap = delta.select(keys.map(col): _*).as("a")
+      val overlap = delta.select(keyCols: _*).as("a")
         .join(dk0.as("b"),
           keys.map(k => col(s"a.$k") <=> col(s"b.$k")).reduce(_ && _),
           "left_semi")
@@ -315,95 +356,51 @@ object Warehouse {
         s"mergeTable delta and deletes share keys on (${keys.mkString(", ")})" +
           " — upsert-then-delete is ambiguous; pick one per key")
     }
-    val meta = cat.getTableMetadata(ident)
+    val meta = cat.getTableMetadata(ident(table))
     require(meta.bucketSpec.isEmpty,
       s"mergeTable() would discard the bucket layout of $qualified")
     val partCols = meta.partitionColumnNames
     val cols = spark.table(qualified).columns.map(col).toIndexedSeq
+    // partition-pruned path when every partition column rides the key: a
+    // key row can never move partitions (its partition values ARE key
+    // values), so rows outside the touched partitions are untouchable and
+    // stay on disk as-is. Null-safe like the survivors join: a NULL
+    // partition value lands in the default partition, and a plain-
+    // equality semi join would drop the current table's NULL-partition
+    // rows from the survivors frame while the delta's NULL rows still put
+    // that partition into the dynamic overwrite — silently deleting its
+    // non-matching rows
+    val pruned = partCols.nonEmpty && partCols.forall(keys.contains)
+    val touched = Option.when(pruned) {
+      val deltaParts = delta.select(partCols.map(col): _*)
+      delKeys.fold(deltaParts)(d => deltaParts.unionByName(
+          d.select(partCols.map(col): _*)))
+        .distinct()
+    }
+    val cur = touched.fold(spark.table(qualified))(t =>
+      spark.table(qualified).as("cur").join(broadcast(t).as("t"),
+        partCols.map(c => col(s"cur.$c") <=> col(s"t.$c")).reduce(_ && _),
+        "left_semi"))
     // null-safe anti join: a NULL key must match a NULL key, or replaying
     // the same delta re-inserts its NULL-keyed rows (idempotence contract);
     // delete keys ride the same removal set — a survivor is a current row
     // matching neither an upserted nor a deleted key
-    val upsertKeys = delta.select(keys.map(col): _*).distinct()
+    val upsertKeys = delta.select(keyCols: _*).distinct()
     val dk = delKeys.fold(upsertKeys)(d => upsertKeys.unionByName(d))
       .distinct().as("k")
-    def survivorsOf(cur: DataFrame): DataFrame = cur.as("c")
+    val out = cur.as("c")
       .join(dk, keys.map(k => col(s"c.$k") <=> col(s"k.$k")).reduce(_ && _),
         "left_anti")
-    def overwriteInto(out: DataFrame, mode: String): Unit =
-      overwritePartitioned(spark, qualified, out, mode)
-    if (partCols.nonEmpty && partCols.forall(keys.contains)) {
-      // partition-pruned path: a key row can never move partitions (its
-      // partition values ARE key values), so rows outside the touched
-      // partitions are untouchable and stay on disk as-is
-      // null-safe like survivorsOf: a NULL partition value lands in the
-      // default partition, and a plain-equality semi join would drop the
-      // current table's NULL-partition rows from the survivors frame
-      // while the delta's NULL rows still put that partition into the
-      // dynamic overwrite — silently deleting its non-matching rows
-      val deltaParts = delta.select(partCols.map(col): _*)
-      val touched = delKeys
-        .fold(deltaParts)(d => deltaParts.unionByName(
-          d.select(partCols.map(col): _*)))
-        .distinct()
-        .select(partCols.map(c => col(c).as(s"t_$c")): _*)
-      val out = survivorsOf(spark.table(qualified).as("cur")
-          .join(org.apache.spark.sql.functions.broadcast(touched),
-            partCols.map(c => col(s"cur.$c") <=> col(s"t_$c"))
-              .reduce(_ && _),
-            "left_semi"))
-        .unionByName(delta.select(cols: _*))
-        .select(cols: _*).localCheckpoint()
-      // a touched partition with NO output rows is invisible to dynamic
-      // overwrite — its stale files would survive the write; collect them
-      // (bounded by the delta/delete key count) and drop them through the
-      // catalog afterwards
-      // spec values go through Cast-to-string — the SAME encoding the
-      // writer uses for partition directory names (and hence what the
-      // catalog stores): raw r.get(i).toString diverges for
-      // date/timestamp (java.sql.Timestamp renders trailing ".0") and
-      // the mismatch + ignoreIfNotExists would silently leave the stale
-      // partition on disk
-      val emptied = touched.as("t")
-        .join(out.select(partCols.map(col): _*).distinct().as("o"),
-          partCols.map(c => col(s"t.t_$c") <=> col(s"o.$c")).reduce(_ && _),
-          "left_anti")
-        .select(partCols.map(c => col(s"t.t_$c").cast("string")): _*)
-        .collect()
-      // reads are materialized (out is checkpointed): the optimistic
-      // check runs here, immediately before the publish
-      val prior = guardStale(spark, table, expectedVersion)
-      overwriteInto(out, "dynamic")
-      graft.api.Checkpoints.release(out)
-      if (emptied.nonEmpty) {
-        val specs = emptied.toSeq.map(r =>
-          partCols.zipWithIndex.map { case (c, i) =>
-            c -> (if (r.isNullAt(i)) "__HIVE_DEFAULT_PARTITION__"
-                  else r.getString(i))
-          }.toMap)
-        cat.dropPartitions(ident, specs, ignoreIfNotExists = true,
-          purge = false, retainData = false)
-      }
-      bumpVersion(spark, table, prior)
-    } else if (partCols.nonEmpty) {
-      // layout-preserving full overwrite: the key can move rows across
-      // partitions, so every partition is rewritten — but THROUGH the
-      // existing table definition, keeping the partition layout
-      val out = survivorsOf(spark.table(qualified))
-        .unionByName(delta.select(cols: _*))
-        .select(cols: _*).localCheckpoint()
-      val prior = guardStale(spark, table, expectedVersion)
-      overwriteInto(out, "static")
-      graft.api.Checkpoints.release(out)
-      bumpVersion(spark, table, prior)
-    } else {
-      val out = survivorsOf(spark.table(qualified))
-        .unionByName(delta.select(cols: _*))
-        .localCheckpoint()
-      val prior = guardStale(spark, table, expectedVersion)
-      out.write.mode(SaveMode.Overwrite).saveAsTable(qualified)
-      graft.api.Checkpoints.release(out)
-      bumpVersion(spark, table, prior)
+      .unionByName(delta.select(cols: _*))
+      .select(cols: _*)
+    // unpartitioned: a plain overwrite; partitioned: THROUGH the existing
+    // table definition so the layout survives — only the touched
+    // partitions when pruned, every partition otherwise
+    commit(table, out, selfRead = true, expectedVersion, touched,
+        Seq(staged)) { o =>
+      if (partCols.isEmpty) save(table, SaveMode.Overwrite, None)(o)
+      else overwritePartitioned(spark, qualified, o,
+        if (pruned) "dynamic" else "static")
     }
   }
 
@@ -457,12 +454,9 @@ object Warehouse {
   def compactClustered(spark: SparkSession, table: String,
       partCol: String, clusterCol: String,
       expectedVersion: Option[Long] = None): Long = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.broadcast
     val qualified = s"$Schema.$table"
-    val ident =
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(Schema))
-    val cat = spark.sessionState.catalog
-    val meta = cat.getTableMetadata(ident)
+    val meta = spark.sessionState.catalog.getTableMetadata(ident(table))
     require(meta.partitionColumnNames == Seq(partCol),
       s"compactClustered expects $qualified partitioned by exactly ($partCol)")
     require(meta.bucketSpec.isEmpty,
@@ -471,42 +465,22 @@ object Warehouse {
     val cols = t.columns.map(col).toIndexedSeq
     val misplaced = t.filter(!(col(partCol) <=> col(clusterCol)))
     val nMoved = misplaced.count()
-    if (nMoved == 0L) return 0L
-    // touched = partitions losing rows plus partitions gaining them; all
-    // their rows rewrite (a destination's resident rows must ride the
-    // dynamic overwrite or they'd be dropped with the old files)
-    val touched = misplaced.select(col(partCol))
-      .unionByName(misplaced.select(col(clusterCol).as(partCol)))
-      .distinct()
-      .select(col(partCol).as("t_p"))
-    val out = t.as("cur")
-      .join(broadcast(touched), col(s"cur.$partCol") <=> col("t_p"),
-        "left_semi")
-      .withColumn(partCol, col(clusterCol))
-      .select(cols: _*)
-      .localCheckpoint()
-    // sources emptied by the move would keep stale files under dynamic
-    // overwrite — collect them (bounded by the touched-partition count)
-    // and drop through the catalog, Cast-to-string spec encoding as in
-    // mergeTable
-    val emptied = touched.as("t")
-      .join(out.select(col(partCol)).distinct().as("o"),
-        col("t.t_p") <=> col(s"o.$partCol"), "left_anti")
-      .select(col("t.t_p").cast("string"))
-      .collect()
-    // reads are materialized (out is checkpointed): optimistic check
-    // immediately before the rewrite publishes
-    val prior = guardStale(spark, table, expectedVersion)
-    overwritePartitioned(spark, qualified, out, "dynamic")
-    graft.api.Checkpoints.release(out)
-    if (emptied.nonEmpty) {
-      val specs = emptied.toSeq.map(r => Map(
-        partCol -> (if (r.isNullAt(0)) "__HIVE_DEFAULT_PARTITION__"
-                    else r.getString(0))))
-      cat.dropPartitions(ident, specs, ignoreIfNotExists = true,
-        purge = false, retainData = false)
+    if (nMoved > 0L) {
+      // touched = partitions losing rows plus partitions gaining them; all
+      // their rows rewrite (a destination's resident rows must ride the
+      // dynamic overwrite or they'd be dropped with the old files), and
+      // the sources the move empties are dropped by the commit step
+      val touched = misplaced.select(col(partCol))
+        .unionByName(misplaced.select(col(clusterCol).as(partCol)))
+        .distinct()
+      val out = t.as("cur")
+        .join(broadcast(touched).as("t"),
+          col(s"cur.$partCol") <=> col(s"t.$partCol"), "left_semi")
+        .withColumn(partCol, col(clusterCol))
+        .select(cols: _*)
+      commit(table, out, selfRead = true, expectedVersion, Some(touched),
+        Nil)(overwritePartitioned(spark, qualified, _, "dynamic"))
     }
-    bumpVersion(spark, table, prior)
     nMoved
   }
 
@@ -536,21 +510,9 @@ object Warehouse {
     */
   def appendEvolved(df: DataFrame, table: String,
       partCol: Option[String] = None): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val spark = df.sparkSession
-    ensureSchema(spark)
-    val qualified = s"$Schema.$table"
-    val ident =
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(Schema))
-    val cat = spark.sessionState.catalog
-    if (!cat.tableExists(ident)) {
-      clearOrphanLocation(spark, table)
-      val w = df.write.mode(SaveMode.ErrorIfExists)
-      partCol.fold(w)(c => w.partitionBy(c)).saveAsTable(qualified)
-      return
-    }
-    val w = evolveAndAlign(df, table).write.mode(SaveMode.Append)
-    partCol.fold(w)(c => w.partitionBy(c)).saveAsTable(qualified)
+    val exists = df.sparkSession.sessionState.catalog.tableExists(ident(table))
+    publish(table, if (exists) evolveAndAlign(df, table) else df)(
+      save(table, SaveMode.Append, partCol))
   }
 
   /** The evolution step shared by [[appendEvolved]] and evolution-aware
@@ -563,11 +525,9 @@ object Warehouse {
     import org.apache.spark.sql.functions.{col, lit}
     val spark = df.sparkSession
     val qualified = s"$Schema.$table"
-    val ident =
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(Schema))
     val cat = spark.sessionState.catalog
     def norm(n: String) = n.toLowerCase(java.util.Locale.ROOT)
-    val meta = cat.getTableMetadata(ident)
+    val meta = cat.getTableMetadata(ident(table))
     val incoming = df.schema.fields.map(f => norm(f.name) -> f).toMap
     // shared columns: the name is the contract, the type must hold it
     meta.schema.fields.foreach { ef =>
@@ -587,7 +547,7 @@ object Warehouse {
     }
     // align to the (possibly widened) definition: typed-NULL fill for the
     // batch's missing columns; writers resolve by name
-    val target = cat.getTableMetadata(ident).schema
+    val target = cat.getTableMetadata(ident(table)).schema
     df.select(target.fields.toIndexedSeq.map { f =>
       if (incoming.contains(norm(f.name))) col(f.name)
       else lit(null).cast(f.dataType).as(f.name)
@@ -612,15 +572,12 @@ object Warehouse {
     * semantics one (the [[compact]] caveat's mirror image).
     */
   def snapshotTable(spark: SparkSession, table: String): Int = {
-    ensureSchema(spark)
     val v = snapshots(spark, table).lastOption.getOrElse(0) + 1
     val snap = s"${table.toLowerCase}$SnapSuffix$v"
-    // same orphan-directory guard as every writer above: a prior JVM's
-    // snapshot directory with no catalog entry must not wedge versioning
-    clearOrphanLocation(spark, snap)
-    spark.table(s"$Schema.$table").write
-      .mode(SaveMode.ErrorIfExists)
-      .saveAsTable(s"$Schema.$snap")
+    // the commit step's orphan-directory guard: a prior JVM's snapshot
+    // directory with no catalog entry must not wedge versioning
+    publish(snap, spark.table(s"$Schema.$table"))(
+      save(snap, SaveMode.ErrorIfExists, None))
     v
   }
 
@@ -681,14 +638,14 @@ object Warehouse {
     */
   def compact(spark: SparkSession, table: String, targetFiles: Int): Unit = {
     val qualified = s"$Schema.$table"
-    val meta = spark.sessionState.catalog.getTableMetadata(
-      org.apache.spark.sql.catalyst.TableIdentifier(table, Some(Schema)))
+    val meta = spark.sessionState.catalog.getTableMetadata(ident(table))
     require(meta.partitionColumnNames.isEmpty && meta.bucketSpec.isEmpty,
       s"compact() would discard the partition/bucket layout of $qualified")
-    val df = spark.table(qualified).repartition(targetFiles)
-    val tmp = s"${qualified}_compacting"
-    df.write.mode(SaveMode.Overwrite).saveAsTable(tmp)
-    spark.sql(s"DROP TABLE $qualified")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $qualified")
+    publish(table, spark.table(qualified).repartition(targetFiles)) { df =>
+      val tmp = s"${qualified}_compacting"
+      df.write.mode(SaveMode.Overwrite).saveAsTable(tmp)
+      spark.sql(s"DROP TABLE $qualified")
+      spark.sql(s"ALTER TABLE $tmp RENAME TO $qualified")
+    }
   }
 }

@@ -481,7 +481,6 @@ object EventStreams {
   }
 
   def valueAlerts(events: DataFrame, threshold: Double = 100.0): DataFrame = {
-    import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._

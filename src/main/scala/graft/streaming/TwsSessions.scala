@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Encoders}
-import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode,
   StatefulProcessor, TimeMode, TimerValues, TTLConfig}
 

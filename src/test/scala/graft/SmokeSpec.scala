@@ -39,22 +39,37 @@ class SmokeSpec extends SparkSpec {
     assert(offenders.isEmpty, s"cartesian plans: $offenders")
   }
 
-  test("parallel sub-jobs have one owner: no global-pool Future/Await outside graft.api.Par") {
-    // a global-EC Future keeps the job group of whichever query grew the
-    // pool and an Await.result(_, Duration.Inf) leaves sibling jobs
-    // running when one branch fails — graft.api.Par.all owns that policy
+  /** Lines of `src/main/scala` outside `owner` that contain a `banned`
+    * string — the single-owner guards below. */
+  private def outsideOwner(owner: String, banned: Seq[String]): List[String] = {
     import scala.jdk.CollectionConverters._
     import java.nio.file.{Files, Paths}
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repo root, not ${Paths.get("").toAbsolutePath}")
-    val banned = Seq("ExecutionContext.Implicits.global", "Await.result", "Duration.Inf")
-    val offenders = Files.walk(root).iterator.asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.endsWith("graft/api/Par.scala"))
+    Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && !p.endsWith(owner))
       .flatMap { p =>
         Files.readAllLines(p).asScala.zipWithIndex.collect {
           case (line, i) if banned.exists(line.contains) => s"$p:${i + 1}: ${line.trim}"
         }
       }.toList
+  }
+
+  test("parallel sub-jobs have one owner: no global-pool Future/Await outside graft.api.Par") {
+    // a global-EC Future keeps the job group of whichever query grew the
+    // pool and an Await.result(_, Duration.Inf) leaves sibling jobs
+    // running when one branch fails — graft.api.Par.all owns that policy
+    val offenders = outsideOwner("graft/api/Par.scala",
+      Seq("ExecutionContext.Implicits.global", "Await.result", "Duration.Inf"))
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("table publishing has one owner: no catalog write or commit-version edit outside graft.sources.Warehouse") {
+    // every publish goes through Warehouse's commit step, which guards
+    // and advances graft.commit.version; a write that bypasses it leaves
+    // the clock behind and lets a stale guarded merge land over it
+    val offenders = outsideOwner("graft/sources/Warehouse.scala",
+      Seq("saveAsTable", "insertInto(", "dropPartitions", "graft.commit.version"))
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }
 

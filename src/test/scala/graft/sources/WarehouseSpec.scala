@@ -512,7 +512,7 @@ class WarehouseSpec extends SparkSpec {
     Warehouse.replacePartitioned(
       Seq((1L, 0L, 0L), (2L, 1L, 0L), (3L, 1L, 1L)).toDF("id", "cell", "p"),
       t, "p")
-    val vRead = Warehouse.commitVersion(spark, t) // 0: no guarded publish yet
+    val vRead = Warehouse.commitVersion(spark, t) // 1: the create published
     // an ingest batch lands AFTER the optimizer's read: another misplaced
     // row appears and the version advances
     Warehouse.mergeTable(Seq((4L, 1L, 0L)).toDF("id", "cell", "p"),
@@ -531,5 +531,59 @@ class WarehouseSpec extends SparkSpec {
     assert(moved === 2L)
     assert(spark.table(q).filter(col("p") =!= col("cell")).count() === 0L)
     assert(Warehouse.commitVersion(spark, t) === vRead + 2)
+  }
+
+  // every publish advances the version, not only the guarded ones: a
+  // replace-style write recreates the table definition (and with it the
+  // property), so without the commit step's bump the clock fell back to
+  // 0 and a later merge brought it back to the version a stale writer
+  // had read — whose guarded merge then landed over the replace
+  test("optimistic concurrency: a replace between read and merge cannot reset the version; the stale merge is refused") {
+    import spark.implicits._
+    val t = "occ_replace"
+    def rows = spark.table(s"${Warehouse.Schema}.$t").collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    Warehouse.mergeTable(Seq((1L, "a")).toDF("id", "state"), t, Seq("id"))
+    val vRead = Warehouse.commitVersion(spark, t) // writer A reads
+    Warehouse.replaceTable(Seq((1L, "r"), (2L, "r")).toDF("id", "state"), t)
+    assert(Warehouse.commitVersion(spark, t) === vRead + 1)
+    Warehouse.mergeTable(Seq((3L, "m")).toDF("id", "state"), t, Seq("id"))
+    assert(Warehouse.commitVersion(spark, t) === vRead + 2)
+    val before = rows
+    assert(before === Map(1L -> "r", 2L -> "r", 3L -> "m"))
+    intercept[java.util.ConcurrentModificationException] {
+      Warehouse.mergeTable(Seq((1L, "A")).toDF("id", "state"), t, Seq("id"),
+        expectedVersion = Some(vRead))
+    }
+    assert(rows === before, "the refused merge wrote")
+    assert(Warehouse.commitVersion(spark, t) === vRead + 2)
+  }
+
+  test("optimistic concurrency: an append or an evolving append between read and merge refuses the stale merge") {
+    import spark.implicits._
+    val t = "occ_append"
+    def rows = spark.table(s"${Warehouse.Schema}.$t").collect()
+      .map(_.toSeq).toSet
+    Warehouse.mergeTable(Seq((1L, "a")).toDF("id", "state"), t, Seq("id"))
+    val vRead = Warehouse.commitVersion(spark, t)
+    Warehouse.appendTable(Seq((2L, "b")).toDF("id", "state"), t)
+    assert(Warehouse.commitVersion(spark, t) === vRead + 1)
+    val afterAppend = rows
+    intercept[java.util.ConcurrentModificationException] {
+      Warehouse.mergeTable(Seq((1L, "A")).toDF("id", "state"), t, Seq("id"),
+        expectedVersion = Some(vRead))
+    }
+    assert(rows === afterAppend, "the refused merge wrote")
+    val vRead2 = Warehouse.commitVersion(spark, t)
+    Warehouse.appendEvolved(
+      Seq((3L, "c", 0.5)).toDF("id", "state", "score"), t)
+    assert(Warehouse.commitVersion(spark, t) === vRead2 + 1)
+    val afterEvolve = rows
+    intercept[java.util.ConcurrentModificationException] {
+      Warehouse.mergeTable(Seq((1L, "A")).toDF("id", "state"), t, Seq("id"),
+        evolve = true, expectedVersion = Some(vRead2))
+    }
+    assert(rows === afterEvolve, "the refused merge wrote")
+    assert(Warehouse.commitVersion(spark, t) === vRead2 + 1)
   }
 }
