@@ -10,8 +10,9 @@ import org.apache.spark.sql.SparkSession
   *   spark.sql("SELECT dpd_bucket, sum(arrear) FROM loan_final GROUP BY 1")
   *   spark.sql("SELECT hash60(text) % 100 AS bucket FROM documents")
   *
-  * Views are lazy logical plans (registration reads only parquet footers
-  * for schemas; no data moves until a query runs), and every Catalyst
+  * Views are lazy logical plans (the first registration per sfDir reads
+  * the parquet footers once for [[Tables.schema]], later ones read
+  * nothing; no data moves until a query runs), and every Catalyst
   * optimization applies across view boundaries. Views are registered
   * UNORDERED — a view with an embedded global ORDER BY would pay a full
   * sort on every downstream query.

@@ -54,25 +54,35 @@ trait GraftQuery {
 }
 
 object GraftQuery {
-  def apply(n: String, d: String, sql: String)(
-      f: (SparkSession, String) => DataFrame): GraftQuery = new GraftQuery {
-    val name = n
-    val doc = d
-    def frame(spark: SparkSession, sfDir: String): DataFrame = f(spark, sfDir)
-    val oracle = Option(sql)
+
+  /** Every registry query: `frame` first puts the native functions
+    * ([[graft.functions.GraftFunctions.register]]) into whatever session
+    * it is handed — a no-op once the session holds them — so no query
+    * body, and no helper it calls, registers anything itself.
+    */
+  private final class Query(
+      val name: String,
+      val doc: String,
+      val oracle: Option[String],
+      override val singleRow: Boolean,
+      override val dialectShared: Boolean,
+      body: (SparkSession, String) => DataFrame) extends GraftQuery {
+    def frame(spark: SparkSession, sfDir: String): DataFrame = {
+      graft.functions.GraftFunctions.register(spark)
+      body(spark, sfDir)
+    }
   }
+
+  def apply(n: String, d: String, sql: String)(
+      f: (SparkSession, String) => DataFrame): GraftQuery =
+    new Query(n, d, Option(sql), false, false, f)
 
   /** A 1-row aggregate query: exempt from the ORDER-BY invariant (and
     * SmokeSpec asserts the frame really is 1 row, so the flag can't lie).
     */
   def oneRow(n: String, d: String, sql: String)(
-      f: (SparkSession, String) => DataFrame): GraftQuery = new GraftQuery {
-    val name = n
-    val doc = d
-    def frame(spark: SparkSession, sfDir: String): DataFrame = f(spark, sfDir)
-    val oracle = Option(sql)
-    override val singleRow = true
-  }
+      f: (SparkSession, String) => DataFrame): GraftQuery =
+    new Query(n, d, Option(sql), true, false, f)
 
   /** A dialect-shared query: ONE SQL string is both the Spark frame and
     * the DuckDB oracle. `views` registers the temp views the text reads;
@@ -82,23 +92,12 @@ object GraftQuery {
     * exemption as [[oneRow]]).
     */
   def shared(n: String, d: String, sql: String, oneRowResult: Boolean = false)(
-      views: (SparkSession, String) => Unit): GraftQuery = new GraftQuery {
-    val name = n
-    val doc = d
-    def frame(spark: SparkSession, sfDir: String): DataFrame = {
-      views(spark, sfDir); spark.sql(sql)
-    }
-    val oracle = Option(sql)
-    override val singleRow = oneRowResult
-    override val dialectShared = true
-  }
+      views: (SparkSession, String) => Unit): GraftQuery =
+    new Query(n, d, Option(sql), oneRowResult, true,
+      (spark, sfDir) => { views(spark, sfDir); spark.sql(sql) })
 
   /** A query with no SQL-expressible oracle (driver does rows-only check). */
   def rowsOnly(n: String, d: String)(
-      f: (SparkSession, String) => DataFrame): GraftQuery = new GraftQuery {
-    val name = n
-    val doc = d
-    def frame(spark: SparkSession, sfDir: String): DataFrame = f(spark, sfDir)
-    val oracle = None
-  }
+      f: (SparkSession, String) => DataFrame): GraftQuery =
+    new Query(n, d, None, false, false, f)
 }

@@ -10,7 +10,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
   * [[value]]. Two rules:
   *
   *   - Markers, not frames: the memo keeps a marker or a small
-  *     driver-side value (LR weights, the quantizer's `k`), never a
+  *     driver-side value (LR weights, the quantizer's `k`, the corpus
+  *     schemas of [[graft.Tables.schema]]), never a
   *     DataFrame. Callers get a fresh `spark.table` read on every call,
   *     so [[Checkpoints.releaseAll]] between queries can never leave a
   *     cached frame pointing at unpersisted blocks.

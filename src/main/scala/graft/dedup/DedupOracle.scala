@@ -351,9 +351,8 @@ object DedupOracle {
     * 0 — and the doc-hash comparison).
     */
   def groupedSplitsSql: String = {
+    import graft.text.TextFns.hash60Sql
     val thr = s"${DedupQueries.ClusterJaccard}::DOUBLE"
-    def h60(x: String) =
-      s"CAST(('0x' || substr(md5($x),1,15))::UBIGINT AS BIGINT)"
     s"""
     WITH RECURSIVE $clusterLabelCtes,
     pe AS MATERIALIZED (
@@ -365,9 +364,9 @@ object DedupOracle {
     ),
     gs AS MATERIALIZED (
       SELECT doc_id, gkey,
-        CASE WHEN ${h60("'grp:' || CAST(gkey AS VARCHAR)")} % 100 < 80
+        CASE WHEN ${hash60Sql("'grp:' || CAST(gkey AS VARCHAR)")} % 100 < 80
                THEN 'train'
-             WHEN ${h60("'grp:' || CAST(gkey AS VARCHAR)")} % 100 < 90
+             WHEN ${hash60Sql("'grp:' || CAST(gkey AS VARCHAR)")} % 100 < 90
                THEN 'val'
              ELSE 'test' END AS split
       FROM grp
@@ -383,9 +382,9 @@ object DedupOracle {
     ),
     dh AS (
       SELECT doc_id,
-        CASE WHEN ${h60("lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))")} % 100 < 80
+        CASE WHEN ${hash60Sql("lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))")} % 100 < 80
                THEN 'train'
-             WHEN ${h60("lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))")} % 100 < 90
+             WHEN ${hash60Sql("lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))")} % 100 < 90
                THEN 'val'
              ELSE 'test' END AS split_dh
       FROM documents

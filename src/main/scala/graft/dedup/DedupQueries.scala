@@ -146,11 +146,9 @@ object DedupQueries {
     * (doc_id, text) frame so fixture corpora can drive the pipeline in
     * tests.
     */
-  def shingleSet(docs: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  def shingleSet(docs: DataFrame, n: Int): DataFrame =
     docs.select(col("doc_id"),
       explode(array_distinct(shingles(tokens(col("text")), n))).as("sh"))
-  }
 
   /** One corpus scan + tokenize, materialized: (doc_id, toks). The shared
     * input for [[clustersMulti]]'s three miners — 3-gram shingles, 2-gram
@@ -162,10 +160,8 @@ object DedupQueries {
     * queries skip this cut: for them the checkpoint write would cost more
     * than the one tokenize pass it saves.
     */
-  private[graft] def tokenizedDocs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
+  private[graft] def tokenizedDocs(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), tokens(col("text")).as("toks")).localCheckpoint()
-  }
 
   /** Exact dedup summary: fingerprint = md5(normalized text); the kept set
     * is one doc per fingerprint. (The corpus has no exact dups — the zero
@@ -249,7 +245,6 @@ object DedupQueries {
     // the Generate, re-evaluating a per-DOCUMENT expression once per
     // POSTING row — measured 2x on the split-tagged build (the tag is an
     // md5 over the normalized text, and each doc explodes to ~300 rows).
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val pre = docs.select(col("doc_id") +: col("text") +: extra: _*)
     val keep = pre.columns.toSeq.filterNot(_ == "text").map(col)
     capPostings(pre.select(keep :+
@@ -358,7 +353,6 @@ object DedupQueries {
     * not per corpus scan.
     */
   private[graft] def rowMinhashSigs(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val sh = array_distinct(shingles(tokens(col("text")), MinhashShingleN))
     val sigs = (0 until MinhashK).map { i =>
       array_min(transform(sh, s => minhashFn(s, i))).as(s"s$i")
@@ -562,7 +556,6 @@ object DedupQueries {
     */
   private[graft] def incrementalScreenFrame(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = docs.select(col("doc_id"),
       (hash60(normText(col("text"))) % 100 >= IncrementalIncomingBucket)
         .as("incoming"),
@@ -974,7 +967,6 @@ object DedupQueries {
     "dedup_cluster_increment",
     s"incremental cluster maintenance: frontier CC over persisted labels + batch edges, per-cluster merge_ok vs full recompute",
     DedupOracle.clusterIncrementSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     clusterIncrementFrame(Tables.documents(s, d),
       hash60(normText(col("text"))) % 100 >= IncrementalIncomingBucket,
       Some(sharedNgramPairs(s, d)))
@@ -1222,7 +1214,6 @@ object DedupQueries {
   /** The paragraph-pair pipeline over any (doc_id, text) frame. */
   def paragraphPairsFrame(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val chunks = docs
       .select(col("doc_id"), tokens(col("text")).as("toks"))
       .select(col("doc_id"), posexplode(transform(
@@ -1295,7 +1286,6 @@ object DedupQueries {
     * corpus, and only they pay the per-position machinery.
     */
   def spanStripFrame(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = docs.select(col("doc_id"), col("text"),
       tokens(col("text")).as("toks"))
     // every window OCCURRENCE with its 1-based start position — NOT
@@ -1385,7 +1375,6 @@ object DedupQueries {
   /** The longest-common-span pipeline over any (doc_id, text) frame. */
   def longestSpanFrame(docs: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val pos = docs
       .select(col("doc_id"), posexplode(shingles(tokens(col("text")), SpanN)))
       .select(col("doc_id"), col("pos"), col("col").as("sh"))
@@ -1438,7 +1427,6 @@ object DedupQueries {
 
   /** The duplication-mass pipeline over any (doc_id, lang, text) frame. */
   def dupSpanMassFrame(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val base = docs.select(col("doc_id"), col("lang"),
       tokens(col("text")).as("toks"))
     val occ = base.select(col("doc_id"),
@@ -1765,7 +1753,6 @@ object DedupQueries {
   /** The bloom-screen pipeline over any (doc_id, text) frame. */
   private[graft] def bloomScreenFrame(docs: DataFrame): DataFrame = {
     val s = docs.sparkSession
-    graft.functions.GraftFunctions.register(s)
     val base = docs.select(col("doc_id"),
       (col("doc_id") % BloomBatchModulus === BloomBatchResidue).as("incoming"),
       graft.text.TextFns.fingerprint(col("text")).as("fp"))

@@ -9,9 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * Two routes to the same FunctionRegistry entries:
   *   1. `spark.sql.extensions=graft.functions.GraftExtensions` — the
   *      standard plugin route for clusters;
-  *   2. [[GraftFunctions.register]] — imperative, idempotent, called by the
-  *      query builders so the functions exist in ANY session the driver
-  *      hands us.
+  *   2. [[GraftFunctions.register]] — imperative, idempotent, called at
+  *      the registry boundary (every [[graft.api.GraftQuery]] frame, and
+  *      [[graft.GraftCatalog.register]]) so the functions exist in ANY
+  *      session a query is handed.
   */
 object GraftFunctions {
 
@@ -99,11 +100,18 @@ object GraftFunctions {
         "actualNum" -> actual.toString,
         "docroot" -> "https://spark.apache.org/docs/latest"))
 
-  def register(spark: SparkSession): Unit =
+  /** Puts every function of [[all]] into `spark`'s registry. A name that
+    * already resolves to its builder here (an earlier call, or the
+    * extension route) is left alone, so repeat calls write nothing — and
+    * log no "replaced a previously registered function" warning.
+    */
+  def register(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     all.foreach { case (name, _, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
+      if (!registry.lookupFunctionBuilder(FunctionIdentifier(name)).contains(builder))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
     }
+  }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {

@@ -10,14 +10,9 @@ package graft.layout
 object LayoutOracle {
 
   import LayoutQueries._
+  import graft.text.TextFns.hash60Sql
 
   private def duckIdiv(a: String, b: String): String = s"($a) // ($b)"
-
-  /** First-60-bits-of-md5 as BIGINT — must stay bit-identical to
-    * TextFns.hash60 (the per-oracle-file convention).
-    */
-  private def hash60Sql(x: String): String =
-    s"CAST(('0x' || substr(md5($x),1,15))::UBIGINT AS BIGINT)"
 
   /** mx/base/enriched: the row-level grid frame (x, pk, y, z, bands);
     * with `ingest` the content-hash split residues ih/ihf ride along

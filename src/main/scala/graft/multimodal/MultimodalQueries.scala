@@ -114,7 +114,6 @@ object MultimodalQueries {
     "multimodal_features",
     "real PGM decode via native decode_pgm: dimensions + pixel stats per asset",
     MultimodalOracle.featuresSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     media(s, d)
       .withColumn("img", call_function("decode_pgm", col("pgm")))
       .select(col("doc_id"), col("media_type"),
@@ -148,7 +147,6 @@ object MultimodalQueries {
     "multimodal_phash_buckets",
     "perceptual dedup: quantized byte-histogram codes, buckets with >1 asset",
     MultimodalOracle.phashBucketsSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     media(s, d)
       .withColumn("features", call_function("byte_histogram", col("payload")))
       .withColumn("sig", array_join(
@@ -184,7 +182,6 @@ object MultimodalQueries {
     "multimodal_thumbnail",
     s"real thumbnail: $ThumbWidth-sample box resample of the decoded PGM pixel stream",
     MultimodalOracle.thumbnailSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val n = size(col("img.pixels"))
     val thumbs = (0 until ThumbWidth).map { j =>
       val lo = floor((n * lit(j)) / lit(ThumbWidth.toDouble)).cast("int")
@@ -237,7 +234,6 @@ object MultimodalQueries {
     s"visual near-dup: banded thumbnail candidates, mean |sample diff| <= $NeardupMaxDist, top-20",
     MultimodalOracle.thumbnailNeardupSql) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val n = size(col("img.pixels"))
     val tArr = array((0 until ThumbWidth).map { j =>
       val lo = floor((n * lit(j)) / lit(ThumbWidth.toDouble)).cast("int")
@@ -310,7 +306,6 @@ object MultimodalQueries {
     "multimodal_gradients",
     "2-D decoded-grid gradients: row-aware mean/max + edge fraction per asset",
     MultimodalOracle.gradientsSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     media(s, d)
       .withColumn("img", call_function("decode_pgm", col("pgm")))
       .filter(size(col("img.pixels")) > 0)
@@ -338,7 +333,6 @@ object MultimodalQueries {
     "multimodal_audio_features",
     "audio-asset 1-D signal stats: zero-crossing rate, RMS, peak (8-bit PCM read)",
     MultimodalOracle.audioFeaturesSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val px = col("img.pixels")
     val n = size(px)
     val crossings = size(filter(
@@ -379,7 +373,6 @@ object MultimodalQueries {
     "multimodal_scene_cuts",
     s"video shot boundaries: per-frame(row) luma sums, cut at mean-delta >= $CutThreshold, exact-integer test",
     MultimodalOracle.sceneCutsSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val px = col("img.pixels")
     val w = col("img.width")
     val h = col("img.height")
@@ -447,7 +440,6 @@ object MultimodalQueries {
       pairsOpt: Option[DataFrame] = None): DataFrame = {
     import graft.sim.SimFns
     import graft.dedup.DedupQueries
-    graft.functions.GraftFunctions.register(docsIn.sparkSession)
     val docs = docsIn.select(col("doc_id"), col("lang"))
     val vecs = embIn
       .select(col("vec_id"), SimFns.toDouble(col("embedding")).as("v"))
@@ -534,7 +526,6 @@ object MultimodalQueries {
     "multimodal_spectral",
     s"audio DFT: $SpectralBins-bin power spectrum of the $ThumbWidth-sample resampled frame + dominant bin",
     MultimodalOracle.spectralSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     spectralFrame(media(s, d).filter(col("media_type") === "audio"))
   }
 
@@ -614,7 +605,6 @@ object MultimodalQueries {
     "multimodal_text_to_asset",
     "cross-modal retrieval: text query LSH-probes byte-class asset signatures, cosine top-10 + exact-truth hit grade",
     MultimodalOracle.textToAssetSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     textToAssetFrame(media(s, d))
   }
 
@@ -692,7 +682,6 @@ object MultimodalQueries {
     "multimodal_audio_segments",
     s"audio activity segmentation: $VadFrameLen-sample frames, integer energy gate at half the mean, run-length segments per asset",
     MultimodalOracle.audioSegmentsSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     audioSegmentsFrame(media(s, d).filter(col("media_type") === "audio"))
   }
 
@@ -763,7 +752,6 @@ object MultimodalQueries {
     "multimodal_blur_score",
     s"vision quality screen: variance of the 4-neighbour Laplacian per decoded image, blurry at < $BlurVarThreshold",
     MultimodalOracle.blurScoreSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     blurFrame(media(s, d))
   }
 

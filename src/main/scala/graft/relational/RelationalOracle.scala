@@ -6,12 +6,7 @@ package graft.relational
   */
 object RelationalOracle {
 
-  /** First-60-bits-of-md5 as BIGINT — must stay bit-identical to
-    * TextFns.hash60 (the SimOracle/TextOracle convention, one copy per
-    * oracle file).
-    */
-  private def hash60Sql(x: String): String =
-    s"CAST(('0x' || substr(md5($x),1,15))::UBIGINT AS BIGINT)"
+  import graft.text.TextFns.hash60Sql
 
   /** KMV twin — a `def` (not `val`): it interpolates KmvK/KmvBand, and
     * this object initializes at the FIRST RelationalQueries GraftQuery

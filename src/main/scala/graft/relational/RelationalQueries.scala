@@ -703,7 +703,6 @@ object RelationalQueries {
     "urgent_revenue_bloom",
     "bloom_filter_agg/might_contain fact prefilter + exact join (oracle = plain join)",
     RelationalOracle.urgentRevenueSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val sel = Tables.orders(s, d)
       .filter(col("o_orderpriority") === "1-URGENT"
         && col("o_orderdate") >= lit("1997-01-01").cast("timestamp"))

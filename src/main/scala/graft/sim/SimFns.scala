@@ -117,9 +117,9 @@ object SimFns {
     * codegen'd [[graft.functions.VecDot]] expression (bit-identical to
     * the composed `aggregate(zip_with(..))` fold — FunctionsSpec asserts
     * it — but one fused loop instead of interpreted lambdas plus an
-    * intermediate array). Callers construct frames through
-    * [[SimQueries]], whose builders register the function in the session;
-    * ad-hoc users call `GraftFunctions.register(spark)` first.
+    * intermediate array). Every registry frame ([[graft.api.GraftQuery]])
+    * registers the function in its session; code outside the registry
+    * calls [[graft.functions.GraftFunctions.register]] first.
     */
   def dot(a: Column, b: Column): Column =
     call_function("vec_dot", a, b)

@@ -10,6 +10,7 @@ package graft.sim
 object SimOracle {
 
   import SimFns.{Dims, NumPlanes, Planes}
+  import graft.text.TextFns.hash60Sql
 
   private def fold(products: String): String =
     s"list_reduce($products, (a, b) -> a + b)"
@@ -1001,9 +1002,6 @@ object SimOracle {
       COUNT(iv.vec_id) / 10.0::DOUBLE AS recall
     FROM bf LEFT JOIN iv ON bf.qid = iv.qid AND bf.vec_id = iv.vec_id
     GROUP BY bf.qid ORDER BY bf.qid"""
-
-  private def hash60Sql(x: String): String =
-    s"CAST(('0x' || substr(md5($x),1,15))::UBIGINT AS BIGINT)"
 
   /** Unrolled-CTE twin of the HIERARCHICAL Lloyd training
     * ([[SimQueries.trainQuantizer]]): per sweep, assignment by CROSS JOIN

@@ -21,12 +21,10 @@ import SimFns._
 object SimQueries {
 
   /** (vec_id, label, v double[], norm) */
-  private def vecs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  private def vecs(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
-  }
 
   private def queriesOf(v: DataFrame): DataFrame =
     v.filter(col("vec_id") % 100 === 0)
@@ -721,7 +719,6 @@ object SimQueries {
     "embedding_int8_quant",
     "int8 max-abs quantization: scale + reconstruction MSE/cosine/saturation per vector",
     SimOracle.int8QuantSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val v0 = toDouble(col("embedding"))
     Tables.embeddings(s, d)
       .select(col("vec_id"), v0.as("v"))
@@ -2176,7 +2173,6 @@ object SimQueries {
     "chunk_hybrid_search",
     s"chunk-grain RAG retrieval: RRF(k=$RrfK) over hash-projected sign-LSH semantic + chunk BM25 lexical",
     SimOracle.chunkHybridSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     // feature-hash projection of every chunk into the Dims-dim space
     val cv = chunkSparseCoords(docs)
@@ -2279,7 +2275,6 @@ object SimQueries {
     "chunk_late_interaction",
     "late-interaction (MaxSim) retrieval: per-term max cosine over chunk vectors, summed per doc, top-10",
     SimOracle.lateInteractionSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     import graft.text.TextQueries.Bm25Terms
     // x = 0 coordinates (sign-cancelled) are indistinguishable from
@@ -2610,7 +2605,6 @@ object SimQueries {
     "embedding_drift_psi",
     "embedding drift monitor: PSI of the 10% hash batch's IVF-cell occupancy vs the 90% base, add-one smoothed, banded",
     SimOracle.driftPsiSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val hb = call_function("hash60", col("vec_id").cast("string")) % 10
     driftPsiFrame(sharedCells(s, d).withColumn("is_old", (hb =!= 0).cast("int")))
   }

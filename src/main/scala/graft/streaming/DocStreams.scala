@@ -17,7 +17,9 @@ import graft.dedup.DedupQueries
   * stream-static on (b, bk), which Spark executes as a per-batch lookup
   * against the static side. The SAME transform runs on a batch frame
   * (spark.read) bit-for-bit, which is how [[StreamingSpec]] asserts
-  * batch/stream parity.
+  * batch/stream parity. The signatures use the native `shingles`
+  * function, so a caller outside a registry frame runs
+  * [[graft.functions.GraftFunctions.register]] on its session first.
   */
 object DocStreams {
 

@@ -1,11 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.functions._
-
 /** End-to-end Structured Streaming run over the events corpus as a FILE
   * source (the production shape: a directory that keeps receiving files):
   *
-  *   runMain graft.StreamDemo <sfDir>
+  *   runMain graft.streaming.StreamDemo <sfDir>
   *
   * readStream(parquet, explicit schema) -> watermark + tumbling window ->
   * writeStream(memory, availableNow trigger) — processes the whole
@@ -32,21 +30,14 @@ object StreamDemo {
       dir.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$sfDir/events.parquet"))
 
-    // same dtype branch as Tables.events: the corpus has stored ts both as
-    // TIMESTAMP(NANOS) (long under nanosAsLong) and as timestamp[us]
-    // (TIMESTAMP_NTZ); the stream must normalize to TimestampType either way
-    val rawSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def normalizeTs(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      rawSchema("ts").dataType match {
-        case org.apache.spark.sql.types.LongType =>
-          df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-        case _ => df.withColumn("ts", col("ts").cast("timestamp"))
-      }
-    val stream = normalizeTs(spark.readStream
-      .schema(rawSchema)
-      .parquet(dir.toString))
+    // the batch loader's schema and ts normalizer, so both legs read the
+    // corpus the same way whichever dtype it stores ts as
+    def events(): org.apache.spark.sql.DataFrame =
+      graft.Tables.normalizeTs(spark.readStream
+        .schema(graft.Tables.schema(spark, sfDir, "events"))
+        .parquet(dir.toString))
 
-    val q = EventStreams.tumblingCounts(stream)
+    val q = EventStreams.tumblingCounts(events())
       .writeStream
       .format("memory")
       .queryName("stream_tumbling")
@@ -66,11 +57,8 @@ object StreamDemo {
     // second leg: the same stream delivered EXACTLY-ONCE into a warehouse
     // table via the idempotent foreachBatch sink (StreamSinks), then
     // parity-checked against the memory-sink result
-    val stream2 = normalizeTs(spark.readStream
-      .schema(rawSchema)
-      .parquet(dir.toString))
     val q2 = StreamSinks.toWarehouse(
-      EventStreams.tumblingCounts(stream2), "stream_tumbling_sink")
+      EventStreams.tumblingCounts(events()), "stream_tumbling_sink")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()
     q2.awaitTermination()

@@ -39,8 +39,9 @@ object TextFns {
     * ~12x faster than the interpreted transform/slice/concat_ws
     * composition — see [[shinglesComposed]], kept as the
     * differential-testing twin). Same session contract as
-    * [[graft.sim.SimFns.dot]]: frames built by the query objects register
-    * the function; ad-hoc users call `GraftFunctions.register(spark)`
+    * [[graft.sim.SimFns.dot]]: every registry frame
+    * ([[graft.api.GraftQuery]]) registers the function in its session;
+    * code outside the registry calls [[graft.functions.GraftFunctions.register]]
     * first (the shared test session does).
     */
   def shingles(toks: Column, n: Int): Column =
@@ -70,10 +71,16 @@ object TextFns {
 
   /** First 60 bits of md5 as a non-negative long — the shared "hash to
     * integer" primitive (stays below 2^63 so BIGINT casts agree everywhere).
-    * DuckDB twin: CAST(('0x' || substr(md5(x),1,15))::UBIGINT AS BIGINT).
+    * DuckDB twin: [[hash60Sql]].
     */
   def hash60(c: Column): Column =
     conv(substring(md5(c), 1, 15), 16, 10).cast("long")
+
+  /** [[hash60]]'s DuckDB twin over the SQL expression `x`, for every
+    * oracle that hashes.
+    */
+  def hash60Sql(x: String): String =
+    s"CAST(('0x' || substr(md5($x),1,15))::UBIGINT AS BIGINT)"
 
   /** SimHash width: all 60 bits of the per-token hash60 value. 60 bits
     * gives the near-dup banding 4 independent 15-bit bands (2^15 buckets

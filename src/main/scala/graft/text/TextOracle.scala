@@ -22,6 +22,8 @@ package graft.text
   */
 object TextOracle {
 
+  import TextFns.hash60Sql
+
   private def orChain(v: String, words: Seq[String]): String =
     words.map(w => s"$v = '$w'").mkString(" OR ")
 
@@ -964,9 +966,6 @@ object TextOracle {
     FROM ranked WHERE rank <= $k
     ORDER BY leaning, rank"""
   }
-
-  private def hash60Sql(x: String): String =
-    s"CAST(('0x' || substr(md5($x),1,15))::UBIGINT AS BIGINT)"
 
   private val normTextSql: String =
     "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"

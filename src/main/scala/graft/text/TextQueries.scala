@@ -835,7 +835,6 @@ object TextQueries {
     "doc_fingerprints",
     "document fingerprinting: md5(normalized) + min word-3-gram hash",
     TextOracle.fingerprintsSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     Tables.documents(s, d)
       .withColumn("toks", tokens(col("text")))
       .select(
@@ -860,7 +859,6 @@ object TextQueries {
     * SimHash near-dup pair search in [[graft.dedup.DedupQueries]].
     */
   def simhashFrame(s: org.apache.spark.sql.SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     simhashFromTokens(Tables.documents(s, d)
       .select(col("doc_id"), tokens(col("text")).as("toks")))
   }
@@ -870,7 +868,6 @@ object TextQueries {
     * evidence classes (see [[graft.dedup.DedupQueries.tokenizedDocs]]).
     */
   def simhashFromTokens(tokDocs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(tokDocs.sparkSession)
     tokDocs
       .select(col("doc_id"), explode(col("toks")).as("token"))
       .select(col("doc_id"), call_function("hash60", col("token")).as("h"))
@@ -970,7 +967,6 @@ object TextQueries {
     "doc_repetition",
     "repetition filter: dup 2-gram fraction + top-token share per document",
     TextOracle.repetitionSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val docs = Tables.documents(s, d)
     val grams = docs
       .withColumn("g", shingles(tokens(col("text")), 2))
@@ -1442,7 +1438,6 @@ object TextQueries {
     "doc_normalize_nfc",
     "Unicode canonicalization: native NFC expression + confusable/zero-width squash, canonical dedup fingerprint",
     TextOracle.normalizeNfcSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     normalizeNfcFrame(Tables.documents(s, d)).orderBy("doc_id")
   }
 
@@ -1485,7 +1480,6 @@ object TextQueries {
     "corpus_token_cms",
     "Count-Min sketch token counts vs exact top-10, one-sided error attestation",
     TextOracle.tokenCmsSql) { (s, d) =>
-    graft.functions.GraftFunctions.register(s)
     val toks = Tables.documents(s, d)
       .select(explode(tokens(col("text"))).as("token"))
     val sketch = toks.agg(
@@ -1772,7 +1766,6 @@ object TextQueries {
     "end-to-end prep funnel: cumulative survivors through length/quality/dedup/split",
     TextOracle.pipelineFunnelSql) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val flags = Tables.documents(s, d)
       .withColumn("toks", tokens(col("text")))
       .withColumn("n_toks", size(col("toks")).cast("long"))
@@ -3094,15 +3087,13 @@ object TextQueries {
     "corpus_unseen_mass",
     "Good-Turing unseen mass + Chao1 richness per language over word-3-grams",
     TextOracle.unseenMassSql) { (s, d) =>
-    unseenMassFrame(s, Tables.documents(s, d))
+    unseenMassFrame(Tables.documents(s, d))
   }
 
   /** The unseen-mass derivation over any documents frame — shared by
     * the registry query and the hand trigram fixture (TextDedupSpec).
     */
-  def unseenMassFrame(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
+  def unseenMassFrame(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     docs
       .select(col("lang"),
         explode(shingles(tokens(col("text")), 3)).as("gram"))
@@ -3163,15 +3154,13 @@ object TextQueries {
     "corpus_heavy_hitters",
     s"Misra-Gries heavy hitters, k=$MgK: guaranteed tokens above n/(k+1), exact counts, error-band attestations",
     TextOracle.heavyHittersSql) { (s, d) =>
-    heavyHittersFrame(s, Tables.documents(s, d))
+    heavyHittersFrame(Tables.documents(s, d))
   }
 
   /** The heavy-hitter derivation over any documents frame — shared by
     * the registry query and the planted-skew spec. */
-  def heavyHittersFrame(s: org.apache.spark.sql.SparkSession,
-      docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+  def heavyHittersFrame(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.GraftFunctions.register(s)
     val toks = docs.select(explode(tokens(col("text"))).as("token"))
     val sk = toks
       .agg(call_function("mg_summary", col("token"), lit(MgK)).as("sk"))

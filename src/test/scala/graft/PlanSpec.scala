@@ -101,7 +101,7 @@ class PlanSpec extends SparkSpec {
     // final plan proves the exact-count pass shape)
     assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"),
       s"exact-count pass not a broadcast semi join:\n$plan")
-    val sketch = graft.text.TextQueries.heavyHittersFrame(spark,
+    val sketch = graft.text.TextQueries.heavyHittersFrame(
       graft.Tables.documents(spark, sf))
     // the registry frame's first job ran above; check the aggregate mode
     // on a fresh build of the sketch leg

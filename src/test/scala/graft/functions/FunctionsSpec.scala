@@ -355,7 +355,7 @@ class FunctionsSpec extends SparkSpec {
     val docs = items.grouped(40).zipWithIndex
       .map { case (g, i) => (i.toLong, g.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")
-    val out = graft.text.TextQueries.heavyHittersFrame(spark, docs).collect()
+    val out = graft.text.TextQueries.heavyHittersFrame(docs).collect()
     // with k=32 in the registry frame, guaranteed = f*33 > 2000: hot, warm
     assert(out.map(_.getAs[String]("token")).toSeq === Seq("hot", "warm"))
     assert(out.map(_.getAs[Long]("rank")).toSeq === Seq(1L, 2L))

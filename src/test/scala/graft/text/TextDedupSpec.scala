@@ -1483,7 +1483,7 @@ class TextDedupSpec extends SparkSpec {
       (3L, "p q r s t", "yy", "s", 9L),
       (4L, "p q", "yy", "s", 3L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val got = TextQueries.unseenMassFrame(spark, docs).collect()
+    val got = TextQueries.unseenMassFrame(docs).collect()
       .map(r => r.getString(0) -> r).toMap
     val xx = got("xx")
     assert((xx.getLong(1), xx.getLong(2), xx.getLong(3), xx.getLong(4))
