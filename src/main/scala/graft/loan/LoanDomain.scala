@@ -217,31 +217,18 @@ object LoanDomain {
     "amount_to_be_returned", "months_due", "dpd_days", "dpd_bucket",
     "total_to_be_collected")
 
-  /** loan_final without the presentation sort — input to the rollups. */
+  /** loan_final's output rows over any frame with the joined schema, with
+    * no presentation sort: input to the rollups and the warehouse load.
+    */
+  def loanFinalRows(base: DataFrame): DataFrame =
+    loanFinal(base).select(loanFinalColumns.map(col): _*)
+
   def loanFinalUnordered(spark: SparkSession, sfDir: String): DataFrame =
-    loanFinal(joined(spark, sfDir)).select(loanFinalColumns.map(col): _*)
+    loanFinalRows(joined(spark, sfDir))
 
   def loanFinalFrame(spark: SparkSession, sfDir: String): DataFrame =
     loanFinalUnordered(spark, sfDir).orderBy("loan_id")
 
-  /** G1 — month-wise repayment schedule (main.py:146-193), the reference's
-    * most complex operator. The pandas version is an iterrows loop building
-    * one mini-DataFrame per loan + concat; here it is a single vectorized
-    * `explode(sequence(1, duration))` followed by pure column expressions —
-    * fully distributed, no driver-side loop, scales linearly in
-    * loans × months.
-    *
-    * Quirks preserved (bugs-as-spec, SURVEY.md §7.4): the FULL cumulative
-    * `emi_collected` is credited to EVERY elapsed month (main.py:162), and
-    * the schedule's DPD label set differs from loan_final's (main.py:167-176).
-    *
-    * The reference's running `total_collected += collected` is reproduced as
-    * `ec * running_count(elapsed months)` — an integer window count times a
-    * constant, which is exactly associative (unlike a double window sum, so
-    * it is bit-stable under any partial-aggregation order and matches the
-    * DuckDB oracle; ulp-equal to pandas' sequential adds after the 2dp
-    * output rounding of main.py:182-185).
-    */
   /** F10 — 2dp presentation rounding (main.py:182-185). Spelled out as
     * `floor(x*100 + 0.5)/100` (valid for the non-negative money values here)
     * because engine-native round() differs at half boundaries: Spark rounds
@@ -251,10 +238,42 @@ object LoanDomain {
     */
   def round2(x: Column): Column = floor(x * lit(100) + lit(0.5)) / lit(100.0)
 
-  def monthlySchedule(base: DataFrame, asOfD: Column = asOf): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("loan_id")).orderBy(col("month"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+  /** The number of a loan's instalments due by `asOfD`, clamped to
+    * [0, duration]: `add_months(disb, m)` is strictly increasing in `m`
+    * (each month lands in its own calendar month), so the due months are
+    * exactly `1..k`. With `M` the calendar-month distance from `disb` to
+    * `asOfD`, every month before `M` falls in an earlier calendar month and
+    * is due, every month after it is not, and month `M` itself is due iff
+    * its date is not after `asOfD`.
+    */
+  def monthsPaid(asOfD: Column, disb: Column, durationMonths: Column): Column = {
+    val m = monthDiff(asOfD, disb)
+    least(durationMonths, greatest(lit(0),
+      when(add_months(disb, m) <= asOfD, m).otherwise(m - lit(1))))
+  }
+
+  /** G1 — month-wise repayment schedule (main.py:146-193), the reference's
+    * most complex operator. The pandas version is an iterrows loop building
+    * one mini-DataFrame per loan + concat; here it is a single vectorized
+    * `explode(sequence(1, duration))` followed by pure column expressions —
+    * fully distributed, no driver-side loop, no shuffle, scales linearly in
+    * loans × months.
+    *
+    * Quirks preserved (bugs-as-spec, SURVEY.md §7.4): the FULL cumulative
+    * `emi_collected` is credited to EVERY elapsed month (main.py:162), and
+    * the schedule's DPD label set differs from loan_final's (main.py:167-176).
+    *
+    * The reference's running `total_collected += collected` is
+    * `ec * (due months among 1..month)`. That running count is closed-form:
+    * the due months are a prefix `1..k` ([[monthsPaid]], computed once per
+    * loan before the explode), so at `month` it is `least(month, k)` — an
+    * integer times a constant, exactly the value a running window count
+    * gives, without the window's shuffle and sort. The DuckDB twin in
+    * [[LoanOracle]] keeps the window (`SUM(...) OVER (PARTITION BY loan_id
+    * ORDER BY month)`), so the oracle still checks this argument
+    * independently, and LoanPropertySpec pins the two forms equal.
+    */
+  def monthlySchedule(base: DataFrame, asOfD: Column = asOf): DataFrame =
     base
       .withColumn("duration_months", monthDiff(col("due_date"), col("disbursement_date")))
       .filter(col("duration_months") >= 1)
@@ -262,14 +281,15 @@ object LoanDomain {
       .withColumn("total_payable", totalPayableScheduleShape(
         col("disbursement_amount"), col("interest_rate"), col("duration_months")))
       .withColumn("emi_raw", emiAmount(col("total_payable"), col("duration_months")))
+      .withColumn("months_paid",
+        monthsPaid(asOfD, col("disbursement_date"), col("duration_months")))
       .withColumn("month", explode(sequence(lit(1), col("duration_months"))))
       .withColumn("emi_due_date_d", add_months(col("disbursement_date"), col("month")))
       .withColumn("demand", col("emi_raw") * col("month"))
       .withColumn("collected",
         when(col("emi_due_date_d") <= asOfD, col("ec0")).otherwise(lit(0.0)))
-      .withColumn("paid_months",
-        sum(when(col("emi_due_date_d") <= asOfD, 1).otherwise(0)).over(w))
-      .withColumn("total_collected", col("ec0") * col("paid_months"))
+      .withColumn("total_collected",
+        col("ec0") * least(col("month"), col("months_paid")))
       .withColumn("arrear_raw", greatest(lit(0.0), col("demand") - col("total_collected")))
       .withColumn("dpd_days", dpdDays(col("arrear_raw"), asOfD, col("emi_due_date_d")))
       .select(
@@ -282,7 +302,6 @@ object LoanDomain {
         round2(col("arrear_raw")).as("arrear"),
         col("dpd_days"),
         dpdBucketSchedule(col("dpd_days")).as("dpd_bucket"))
-  }
 
   /** Schedule without the presentation sort — what SQL views register (a
     * view with an embedded global ORDER BY would pay a full sort on every

@@ -11,7 +11,7 @@ object LoanQueries {
 
   val monthlySchedule: GraftQuery = GraftQuery(
     "loan_monthly_schedule",
-    "G1: month-wise repayment schedule via explode(sequence) + window running count (main.py:146-193)",
+    "G1: month-wise repayment schedule via explode(sequence) + closed-form running count (main.py:146-193)",
     LoanOracle.monthlyScheduleSql)(LoanDomain.monthlyScheduleFrame)
 
   def all: Seq[GraftQuery] = Seq(loanFinal, monthlySchedule)

@@ -11,8 +11,11 @@ import org.apache.spark.sql.functions.col
   * Here the sink is the session catalog's warehouse (parquet-backed
   * managed tables); in production the same frames go to
   * `df.write.mode(Overwrite).jdbc(...)` — replace-mode semantics are
-  * identical. `Overwrite` on a managed table is atomic-per-table and
-  * partition-parallel, unlike the reference's row-chunked to_sql INSERTs.
+  * identical. `Overwrite` on a managed table is partition-parallel, unlike
+  * the reference's row-chunked to_sql INSERTs, but NOT atomic: it drops the
+  * old table and then writes the new files, so a write that fails midway
+  * leaves a missing or partial table until the next publish succeeds (a
+  * table format's snapshot commit would close this window).
   */
 object Warehouse {
 
@@ -28,8 +31,7 @@ object Warehouse {
     * with the in-memory catalog, a prior JVM's managed-table directory
     * survives on disk with no catalog entry, and `saveAsTable` refuses to
     * adopt it (LOCATION_ALREADY_EXISTS). When the catalog DOES know the
-    * table, the write handles the swap itself and this is a no-op — the
-    * atomic-per-table property is untouched.
+    * table, the write replaces it itself and this is a no-op.
     */
   private def clearOrphanLocation(spark: SparkSession, table: String): Unit = {
     val cat = spark.sessionState.catalog
@@ -174,13 +176,32 @@ object Warehouse {
     partCol.fold(w)(w.partitionBy(_)).saveAsTable(s"$Schema.$table")
   }
 
-  /** The reference's full Load step: both derived tables, replace mode
-    * (main.py:204-219).
+  /** The reference's full Load step (main.py:62-219): one extract feeds
+    * both derived tables, replace mode.
+    *
+    *   - One extract: `LoanDomain.joined` (about one row per loan) is built
+    *     once, hash-spread on `loan_id` over the session's shuffle
+    *     partitions and materialized (localCheckpoint) before the
+    *     schedule's explode; both tables derive from it, and it is released
+    *     after both publishes, also when one throws.
+    *   - Spread: each write runs one task per partition of the extract, so
+    *     each table lands as that many files, and no write shuffles the
+    *     exploded schedule rows.
+    *   - Set semantics: a loaded table is a set, so neither write sorts
+    *     (the registry frames keep their presentation ORDER BY), and the
+    *     schedule's running count is closed-form
+    *     ([[graft.loan.LoanDomain.monthlySchedule]]): neither write plan
+    *     holds a window or a global sort.
     */
   def loadAll(spark: SparkSession, sfDir: String): Unit = {
-    replaceTable(graft.loan.LoanDomain.loanFinalFrame(spark, sfDir), "loan_final")
-    replaceTable(graft.loan.LoanDomain.monthlyScheduleFrame(spark, sfDir),
-      "loan_monthly_schedule")
+    import graft.loan.LoanDomain
+    val extract = LoanDomain.joined(spark, sfDir)
+      .repartition(spark.sessionState.conf.numShufflePartitions, col("loan_id"))
+      .localCheckpoint()
+    try {
+      replaceTable(LoanDomain.loanFinalRows(extract), "loan_final")
+      replaceTable(LoanDomain.monthlySchedule(extract), "loan_monthly_schedule")
+    } finally graft.api.Checkpoints.release(extract)
   }
 
   /** Partitioned replace-mode load: one directory per partition value —
@@ -559,7 +580,7 @@ object Warehouse {
 
   /** Snapshot the CURRENT contents of a table as an immutable version —
     * the time-travel/rollback primitive replace-mode loads otherwise
-    * destroy: `replaceTable` atomically swaps a table's contents, and
+    * destroy: `replaceTable` replaces a table's contents, and
     * with a snapshot taken first, yesterday's load survives today's
     * overwrite ([[readSnapshot]] serves it; audits, A/B diffs against
     * the prior publish, and rollback all read it). Returns the new

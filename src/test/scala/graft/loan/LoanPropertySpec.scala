@@ -1,7 +1,8 @@
 package graft.loan
 
 import java.sql.Date
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.Gen
@@ -90,5 +91,61 @@ class LoanPropertySpec extends SparkSpec {
     assert(sched.filter(col("arrear") < 0 ||
       !col("dpd_bucket").isin("Current", "0–30", "30–60", "60–90", "90+"))
       .count() === 0)
+  }
+
+  /** The schedule with its running count as a window: the form the DuckDB
+    * twin keeps, and the reference the closed form is checked against.
+    */
+  private def windowSchedule(base: DataFrame, asOfD: Column): DataFrame = {
+    import LoanDomain._
+    val w = Window.partitionBy(col("loan_id")).orderBy(col("month"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    base
+      .withColumn("duration_months", monthDiff(col("due_date"), col("disbursement_date")))
+      .filter(col("duration_months") >= 1)
+      .withColumn("ec0", ec(col("emi_collected")))
+      .withColumn("total_payable", totalPayableScheduleShape(
+        col("disbursement_amount"), col("interest_rate"), col("duration_months")))
+      .withColumn("emi_raw", emiAmount(col("total_payable"), col("duration_months")))
+      .withColumn("month", explode(sequence(lit(1), col("duration_months"))))
+      .withColumn("emi_due_date_d", add_months(col("disbursement_date"), col("month")))
+      .withColumn("demand", col("emi_raw") * col("month"))
+      .withColumn("collected",
+        when(col("emi_due_date_d") <= asOfD, col("ec0")).otherwise(lit(0.0)))
+      .withColumn("paid_months",
+        sum(when(col("emi_due_date_d") <= asOfD, 1).otherwise(0)).over(w))
+      .withColumn("total_collected", col("ec0") * col("paid_months"))
+      .withColumn("arrear_raw", greatest(lit(0.0), col("demand") - col("total_collected")))
+      .withColumn("dpd_days", dpdDays(col("arrear_raw"), asOfD, col("emi_due_date_d")))
+      .select(
+        col("loan_id"),
+        col("month"),
+        date_format(col("emi_due_date_d"), "dd-MMM-yyyy").as("emi_due_date"),
+        round2(col("emi_raw")).as("emi_amount"),
+        round2(col("collected")).as("emi_collected"),
+        round2(col("demand")).as("total_demand_till_month"),
+        round2(col("arrear_raw")).as("arrear"),
+        col("dpd_days"),
+        dpdBucketSchedule(col("dpd_days")).as("dpd_bucket"))
+  }
+
+  test("schedule: the closed-form running count equals the window, row for row") {
+    // as-of dates on month-ends, Feb 28/29, the 1st, mid-month, and before
+    // (2019) or after (2036) every generated loan's schedule
+    val asOfs = Seq("2019-06-15", "2020-01-01", "2021-02-28", "2022-04-30",
+      "2023-01-31", "2024-02-28", "2024-02-29", "2024-03-01", "2025-06-15",
+      "2027-12-31", "2036-01-01")
+    Seq(99L, 2024L).foreach { seed =>
+      val base = loans(300, seed)
+      def all(f: (DataFrame, Column) => DataFrame) = asOfs.map { d =>
+        f(base, to_date(lit(d))).withColumn("as_of", lit(d))
+      }.reduce(_ unionByName _)
+      val closed = all(LoanDomain.monthlySchedule)
+      val window = all(windowSchedule)
+      val n = window.count()
+      assert(n > 0 && closed.count() === n)
+      assert(closed.exceptAll(window).isEmpty, s"seed $seed: rows only in the closed form")
+      assert(window.exceptAll(closed).isEmpty, s"seed $seed: rows only in the window form")
+    }
   }
 }

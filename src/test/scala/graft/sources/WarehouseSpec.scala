@@ -1,23 +1,101 @@
 package graft.sources
 
-import graft.SparkSpec
+import scala.jdk.CollectionConverters._
 
-/** Replace-mode load semantics (S3-S6): second load overwrites, row counts
-  * match the source frames, schema listed in the catalog.
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.SparkSpec
+import graft.loan.LoanDomain
+
+/** Replace-mode load semantics (S3-S6): second load overwrites, the loaded
+  * tables hold exactly the registry frames' rows, schema listed in the
+  * catalog.
   */
 class WarehouseSpec extends SparkSpec {
 
+  /** Physical plans of every query execution `body` runs, adaptive plans
+    * at their final stage and commands with their write query.
+    */
+  private def executedPlans(body: => Unit): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+    val l = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        seen.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try { body; org.apache.spark.GraftBus.drain(spark.sparkContext) }
+    finally spark.listenerManager.unregister(l)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = {
+      val inner = p match {
+        case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+        case q: QueryStageExec => Seq(q.plan)
+        case c: CommandResultExec => Seq(c.commandPhysicalPlan)
+        case _ => Nil
+      }
+      p +: (inner ++ p.children).flatMap(nodes)
+    }
+    seen.asScala.toSeq.flatMap(nodes)
+  }
+
+  /** Row count and two xxhash64 sums: equal for equal multisets of rows. */
+  private def digest(df: DataFrame): Row = {
+    import org.apache.spark.sql.functions.{col, count, lit, shiftrightunsigned, sum, xxhash64}
+    val h = xxhash64(df.columns.map(c => col(s"`$c`")): _*)
+    df.select(h.as("h")).agg(count(lit(1)),
+      sum(col("h").bitwiseAND(lit(0xffffffffL))),
+      sum(shiftrightunsigned(col("h"), 32))).head()
+  }
+
+  private def loaded(t: String) = spark.table(s"${Warehouse.Schema}.$t")
+
   test("loadAll: replace-mode managed tables round-trip") {
     Warehouse.loadAll(spark, sf)
-    Warehouse.loadAll(spark, sf) // replace, not append
-    val lf = spark.table(s"${Warehouse.Schema}.loan_final")
-    val sched = spark.table(s"${Warehouse.Schema}.loan_monthly_schedule")
-    assert(lf.count() ===
-      graft.loan.LoanDomain.loanFinalFrame(spark, sf).count())
-    assert(sched.count() ===
-      graft.loan.LoanDomain.monthlyScheduleFrame(spark, sf).count())
+    val plans = executedPlans(Warehouse.loadAll(spark, sf)) // replace, not append
+    val lf = loaded("loan_final")
+    val sched = loaded("loan_monthly_schedule")
+    // both tables hold exactly the registry frames' rows, as multisets
+    Seq(lf -> LoanDomain.loanFinalFrame(spark, sf),
+        sched -> LoanDomain.monthlyScheduleFrame(spark, sf)).foreach {
+      case (table, frame) =>
+        assert(table.count() === frame.count())
+        assert(table.exceptAll(frame).isEmpty)
+        assert(frame.exceptAll(table).isEmpty)
+    }
+    // the extract is spread: one schedule file per shuffle partition
+    assert(sched.inputFiles.length >=
+      spark.conf.get("spark.sql.shuffle.partitions").toInt)
+    // one pass: both writes ran, neither with a window or a global sort
+    assert(plans.count(_.isInstanceOf[DataWritingCommandExec]) >= 2,
+      plans.map(_.nodeName).distinct.mkString(", "))
+    val offending = plans.collect {
+      case w: WindowExec => w
+      case s: SortExec if s.global => s
+    }
+    assert(offending.isEmpty, offending.mkString("\n"))
     assert(spark.catalog.databaseExists(Warehouse.Schema))
     assert(Warehouse.currentDatabase(spark).nonEmpty)
+  }
+
+  test("loadAll: the loaded tables do not depend on the partition count or AQE") {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val prior = keys.map(k => k -> spark.conf.get(k))
+    val digests = try {
+      for (parts <- Seq(1, 4, 17); aqe <- Seq(true, false)) yield {
+        spark.conf.set(keys(0), parts.toLong)
+        spark.conf.set(keys(1), aqe)
+        Warehouse.loadAll(spark, sf)
+        assert(loaded("loan_monthly_schedule").inputFiles.length >= parts)
+        s"$parts/$aqe" ->
+          Seq("loan_final", "loan_monthly_schedule").map(t => digest(loaded(t)))
+      }
+    } finally prior.foreach { case (k, v) => spark.conf.set(k, v) }
+    assert(digests.map(_._2).distinct.size === 1, digests.mkString("\n"))
   }
 
   test("snapshotTable: versions survive replace-mode overwrites (time travel)") {
